@@ -195,7 +195,7 @@ def test_compact_record_is_one_tail_sized_json_line():
         "sf": 0.001,
     }
     line = bench.compact_record(verbose)
-    assert "\n" not in line
+    assert "\n" not in line and line.startswith('{"metric"')
     assert len(line) < 1900, f"{len(line)} bytes won't survive the tail"
     rec = json.loads(line)
     for key in ("metric", "value", "unit", "queries", "sf"):
@@ -203,3 +203,26 @@ def test_compact_record_is_one_tail_sized_json_line():
     assert set(rec["queries"]) == set(bench.HEADLINE)
     assert rec["queries"]["pricing_summary"] == 123.46  # 2-decimal
     assert rec["value"] == 123.45
+
+
+def test_bench_stdout_has_one_metric_line():
+    """The bench's record is the one stdout line starting with
+    ``{"metric"``: every other ``print`` in bench.py must go to stderr,
+    and the only stdout print is the final compact record."""
+    import ast
+
+    import bench
+
+    tree = ast.parse(Path(bench.__file__).read_text())
+    stdout_prints = [
+        ast.unparse(node)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "print"
+        and not any(
+            k.arg == "file" and ast.unparse(k.value) == "sys.stderr"
+            for k in node.keywords
+        )
+    ]
+    assert stdout_prints == ["print(compact_record(verbose))"], stdout_prints

@@ -273,6 +273,53 @@ def test_max_files_per_trigger_splits_replay(spark, tmp_path):
     assert spark.table("t_throttle").count() == 3
 
 
+def test_file_listing_jobs_are_sized_to_cores(spark, tmp_path):
+    """A replay over more shards than Spark's 32-path parallel-listing
+    threshold lists them with a distributed job. The session caps that
+    job's parallelism at its cores, so no job of the replay runs one
+    task per shard."""
+    import json
+    import re
+
+    cpus = int(re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master).group(1))
+    assert (
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism")
+        == str(cpus)
+    )
+
+    n_shards, per_shard = 48, 2
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for s in range(n_shards):
+        data = [
+            {"id": str(1000 + s * per_shard + k), "user_id": str(s),
+             "game_id": "g1", "language": "en", "viewer_count": k}
+            for k in range(per_shard)
+        ]
+        with open(raw / f"shard_{s:03d}.json", "w") as f:
+            json.dump({"day_date_id": "20260111", "time_of_day_id": "1715",
+                       "data": data}, f)
+
+    q = (
+        stream_raw_streams(spark, str(raw / "*.json"), max_files_per_trigger=None)
+        .writeStream.format("memory")
+        .queryName("t_listing")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "replay did not finish"
+    tracker = spark.sparkContext.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(str(q.runId))
+    assert job_ids, "no jobs recorded under the query's run id"
+    tasks = {
+        j: sum(tracker.getStageInfo(s).numTasks
+               for s in tracker.getJobInfo(j).stageIds)
+        for j in job_ids
+    }
+    assert max(tasks.values()) <= cpus, tasks
+    assert spark.table("t_listing").count() == n_shards * per_shard
+
+
 def test_interval_join_streams_matches_batch(spark, tmp_path):
     """Stream-stream interval join (availableNow replay) must equal the
     same join run as a static batch query."""

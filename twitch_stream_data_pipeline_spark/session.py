@@ -4,8 +4,15 @@ Local mode is the test bed (``local[$SPARK_GRAFT_CPUS]``); the settings
 below are the ones that also matter on a real cluster: AQE for runtime
 re-planning (skew joins, partition coalescing), UTC session timezone so
 results are comparable with the DuckDB oracle, Arrow for any
-pandas-exchange path, and shuffle partitions sized to the machine
-instead of the 200 default.
+pandas-exchange path, and both shuffle partitions and file-listing
+jobs sized to the machine. A path set above
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) is
+listed by a distributed job with one task per path, up to
+``parallelPartitionDiscovery.parallelism`` (default 10,000). Every task
+deserializes the Hadoop configuration, so at one task per raw shard the
+listing outweighs a streaming catch-up's row work. Capping that
+parallelism at ``cpus`` keeps every listing job, still parallel across
+all cores, and drops only the one-task-per-file fan-out.
 """
 
 from __future__ import annotations
@@ -151,6 +158,7 @@ def get_spark(
             f"-Dderby.system.home={scratch}",
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

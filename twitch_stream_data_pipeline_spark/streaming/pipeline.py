@@ -8,10 +8,15 @@ watermarked dedup, curated sink. Batch identity (``day_date_id``,
 ``time_of_day_id``) stays as columns for star-schema parity; event time
 for watermarking is derived from the grid cell.
 
-At scale: the file source lists only new files per trigger
-(``maxFilesPerTrigger`` is the reference's 100-page throttle analog,
-SURVEY.md §4), state for dedup is bounded by the watermark, and
-``availableNow`` gives deterministic replay for tests/backfills.
+At scale: an offset fetch lists the whole raw glob and filters out the
+files already seen; when ``maxFilesPerTrigger`` (the reference's
+100-page throttle analog, SURVEY.md §4) cuts a listing, the unread
+remainder is cached for the next triggers. Each micro-batch then
+re-lists its own files as explicit paths to build its file index. Above
+32 paths both listings run as Spark jobs, which the session factory
+sizes to the cores rather than one task per shard. State for dedup is
+bounded by the watermark, and ``availableNow`` gives deterministic
+replay for tests/backfills.
 """
 
 from __future__ import annotations
