@@ -260,9 +260,9 @@ def test_zscore_aggregates_and_broadcasts_no_window(spark):
 
 
 def test_group_outliers_scalable_shape(spark):
-    """The scale twin of the grouped-map outlier scorer: no
-    applyInPandas (FlatMapGroupsInPandas), centroid and label stats
-    broadcast back, distance keyed on high-cardinality vec_id."""
+    """The aggregation-only outlier scorer: no applyInPandas
+    (FlatMapGroupsInPandas), centroid and label stats broadcast back,
+    distance keyed on high-cardinality vec_id."""
     df = CATALOG["group_outliers_scalable"].fn(spark, SF_SMOKE)
     plan = plan_of(df)
     assert "FlatMapGroupsInPandas" not in plan, plan
@@ -272,25 +272,6 @@ def test_group_outliers_scalable_shape(spark):
     assert "Scan ExistingRDD" in plan, plan
     assert plan.count("BroadcastHashJoin") == 1, plan
     assert "partial_sum" in plan, plan
-
-
-def test_group_outliers_scalable_matches_grouped_map(spark):
-    """The aggregation+broadcast formulation agrees with the grouped-map
-    numpy formulation to the decimal(25,6) routing tolerance."""
-    from twitch_stream_data_pipeline_spark.extensions.similarity import (
-        group_outlier_scores,
-        group_outlier_scores_scalable,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    a = {r["vec_id"]: r for r in group_outlier_scores(emb).collect()}
-    b = {r["vec_id"]: r for r in group_outlier_scores_scalable(emb).collect()}
-    assert set(a) == set(b)
-    for vid, ra in a.items():
-        rb = b[vid]
-        assert ra["label"] == rb["label"]
-        assert abs(ra["dist"] - rb["dist"]) < 1e-3, (vid, ra, rb)
-        assert abs(ra["zdist"] - rb["zdist"]) < 1e-3, (vid, ra, rb)
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

@@ -217,8 +217,8 @@ def test_all_empty_corpus_document_queries(spark, all_empty_docs_dir):
     n_selected = 0
     for name, q in sorted(CATALOG.items()):
         # select by what the IMPLEMENTATION reads, not by oracle text:
-        # oracle=None entries (bpe_train_merges, multimodal_features)
-        # read documents too and must survive the zero-token corpus
+        # oracle=None entries (bpe_train_merges) read documents too
+        # and must survive the zero-token corpus
         # (review r9 — the oracle-text filter silently skipped them)
         try:
             src = inspect.getsource(q.fn)

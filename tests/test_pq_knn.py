@@ -1,7 +1,9 @@
-"""Tests for product-quantization ANN (pq_knn): exact ADC
-reconstruction when the codebook covers the candidate subvectors,
-recall against brute-force cosine on clustered data, and the
-catalog-entry smoke."""
+"""Tests for product-quantization ANN over the on-disk IVF+PQ layout
+(build_ivfpq_index + ivfpq_index_knn): exact ADC reconstruction when
+the codebook covers the candidate subvectors, recall against
+brute-force cosine on clustered data (``n_cells=1`` is plain PQ),
+the catalog-entry smoke, and the layout's pruning and append
+contracts."""
 
 from __future__ import annotations
 
@@ -12,8 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from twitch_stream_data_pipeline_spark.extensions.similarity import (
+    build_ivfpq_index,
     cosine_knn,
-    pq_knn,
+    ivfpq_index_knn,
 )
 
 from .conftest import SF_SMOKE
@@ -26,7 +29,15 @@ def _vec_df(spark, rows, dim):
     )
 
 
-def test_pq_adc_exact_when_codebook_covers(spark):
+def _pq_knn(spark, tmp_path, queries, df, k, n_cells=1, n_probe=1, **build):
+    """Build an IVF+PQ layout over ``df`` and probe it; the default
+    single cell makes it plain PQ search."""
+    path = str(tmp_path / f"ivfpq_{n_cells}")
+    build_ivfpq_index(df, path, n_cells=n_cells, **build)
+    return ivfpq_index_knn(spark, path, queries, k=k, n_probe=n_probe)
+
+
+def test_pq_adc_exact_when_codebook_covers(spark, tmp_path):
     """Candidates built from 4 distinct subvector blocks, n_codes
     large enough to hold every distinct subvector -> encoding
     reconstructs exactly and ADC == exact normalized dot product."""
@@ -46,8 +57,8 @@ def test_pq_adc_exact_when_codebook_covers(spark):
     queries = df.filter(F.col("vec_id") < 3)
     got = {
         (r["query_id"], r["neighbor_id"]): r["adc_cosine"]
-        for r in pq_knn(
-            df.filter(F.col("vec_id") < 3), df, k=5, m=m, n_codes=16,
+        for r in _pq_knn(
+            spark, tmp_path, queries, df, k=5, m=m, n_codes=16,
             train_size=64, iters=4,
         ).collect()
     }
@@ -60,7 +71,7 @@ def test_pq_adc_exact_when_codebook_covers(spark):
         assert abs(adc - exact[key]) < 1e-9, key
 
 
-def test_pq_recall_on_clustered_data(spark):
+def test_pq_recall_on_clustered_data(spark, tmp_path):
     """Well-separated clusters of 5, k=4: the exact top-4 of each
     query is exactly its 4 cluster siblings (cross-cluster cosines are
     far lower), and PQ must recover that set — the recall claim at the
@@ -82,7 +93,9 @@ def test_pq_recall_on_clustered_data(spark):
             vid += 1
     df = _vec_df(spark, rows, dim)
     queries = df.filter(F.col("vec_id").isin(0, 10, 20, 30))
-    approx = pq_knn(queries, df, k=4, m=8, n_codes=16, train_size=128).collect()
+    approx = _pq_knn(
+        spark, tmp_path, queries, df, k=4, m=8, n_codes=16, train_size=128
+    ).collect()
     exact = cosine_knn(queries, df, k=4).collect()
     ex = {}
     for r in exact:
@@ -97,34 +110,15 @@ def test_pq_recall_on_clustered_data(spark):
         assert neigh == ex[q], (q, neigh, ex[q])
 
 
-def test_pq_knn_catalog_smoke(spark):
-    from twitch_stream_data_pipeline_spark.plans import CATALOG
-
-    out = CATALOG["pq_knn"].fn(spark, SF_SMOKE)
-    rows = out.collect()
-    assert out.columns == ["query_id", "neighbor_id", "adc_cosine", "rank"]
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-        assert r["query_id"] != r["neighbor_id"]
-    assert len(per_q) == 10
-    for ranks in per_q.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
 # ---------------------------------------------------------------------------
-# ivfpq_knn (composition)
+# IVF + PQ composed
 # ---------------------------------------------------------------------------
 
 
-def test_ivfpq_exact_when_probe_all_and_codebook_covers(spark):
+def test_ivfpq_exact_when_probe_all_and_codebook_covers(spark, tmp_path):
     """Composed exactness: probing every cell removes the IVF
     approximation, a covering codebook removes the PQ approximation —
     the composition must equal brute-force cosine exactly."""
-    from twitch_stream_data_pipeline_spark.extensions.similarity import (
-        ivfpq_knn,
-    )
-
     random.seed(7)
     dim, m = 16, 4
     blocks = [
@@ -141,9 +135,9 @@ def test_ivfpq_exact_when_probe_all_and_codebook_covers(spark):
     queries = df.filter(F.col("vec_id") < 3)
     got = {
         (r["query_id"], r["neighbor_id"]): r["adc_cosine"]
-        for r in ivfpq_knn(
-            queries, df, k=5, n_cells=4, n_probe=4, m=m, n_codes=16,
-            train_size=64, iters=4,
+        for r in _pq_knn(
+            spark, tmp_path, queries, df, k=5, n_cells=4, n_probe=4, m=m,
+            n_codes=16, train_size=64, iters=4,
         ).collect()
     }
     exact = {
@@ -155,15 +149,16 @@ def test_ivfpq_exact_when_probe_all_and_codebook_covers(spark):
         assert abs(adc - exact[key]) < 1e-9, key
 
 
-def test_ivfpq_catalog_smoke(spark):
+def test_ivfpq_index_catalog_smoke(spark):
     from twitch_stream_data_pipeline_spark.plans import CATALOG
 
-    out = CATALOG["ivfpq_knn"].fn(spark, SF_SMOKE)
+    out = CATALOG["ivfpq_index_knn"].fn(spark, SF_SMOKE)
     rows = out.collect()
     assert out.columns == ["query_id", "neighbor_id", "adc_cosine", "rank"]
     per_q = {}
     for r in rows:
         per_q.setdefault(r["query_id"], []).append(r["rank"])
+        assert r["query_id"] != r["neighbor_id"]
     assert len(per_q) == 10
     for ranks in per_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
@@ -232,11 +227,9 @@ def test_pca_project_properties(spark):
 
 
 def test_ivfpq_index_layout_and_equivalences(spark, tmp_path):
-    """The on-disk IVF+PQ layout: (a) probing it equals the in-memory
-    ivfpq_knn under the same parameters (same bounded training sample
-    -> same models -> same ADC scores); (b) at n_probe == n_cells with
-    a covering codebook the result equals brute-force cosine exactly;
-    (c) probing fewer cells prunes partitions (PartitionFilters); (d)
+    """The on-disk IVF+PQ layout: (a) at n_probe == n_cells with a
+    covering codebook the result equals brute-force cosine exactly;
+    (b) probing fewer cells prunes partitions (PartitionFilters); (c)
     the append contract: the persisted models stay BYTE-IDENTICAL (an
     append never retrains) and a full probe sees vectors from both
     generations."""
@@ -249,7 +242,6 @@ def test_ivfpq_index_layout_and_equivalences(spark, tmp_path):
         build_ivfpq_index,
         cosine_knn,
         ivfpq_index_knn,
-        ivfpq_knn,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -266,20 +258,7 @@ def test_ivfpq_index_layout_and_equivalences(spark, tmp_path):
     assert spark.read.parquet(path).count() == n_all
 
     q = emb.filter(F.col("vec_id") < 5)
-
-    def key(rows):
-        return sorted(
-            (r["query_id"], r["neighbor_id"], r["rank"],
-             round(r["adc_cosine"], 9))
-            for r in rows
-        )
-
     disk_rows = ivfpq_index_knn(spark, path, q, k=5, n_probe=4).collect()
-    mem = ivfpq_knn(
-        q, emb, k=5, n_cells=4, n_probe=4, m=8,
-        n_codes=max(64, n_all), train_size=n_all,
-    )
-    assert key(disk_rows) == key(mem.collect())
 
     # covering codebook + all cells probed == exact cosine
     exact = {
@@ -341,12 +320,6 @@ def test_zero_norm_vectors_never_produce_nan(spark, tmp_path):
     build + probe with a zero vector on BOTH sides."""
     import math
 
-    from twitch_stream_data_pipeline_spark.extensions.similarity import (
-        build_ivfpq_index,
-        ivfpq_index_knn,
-        ivfpq_knn,
-    )
-
     random.seed(31)
     dim = 16
     rows = [(0, [0.0] * dim)] + [
@@ -360,15 +333,10 @@ def test_zero_norm_vectors_never_produce_nan(spark, tmp_path):
     assert spark.read.parquet(path).filter("vec_id = 0").count() == 1
     # ... and probing WITH a zero-vector query yields finite scores
     q = df.filter(F.col("vec_id").isin(0, 1))
-    for out in (
-        ivfpq_index_knn(spark, path, q, k=3, n_probe=4).collect(),
-        ivfpq_knn(q, df, k=3, n_cells=4, n_probe=4, m=4, n_codes=8,
-                  train_size=12).collect(),
-    ):
-        by_q = {}
-        for r in out:
-            assert not math.isnan(r["adc_cosine"]), r
-            by_q.setdefault(r["query_id"], []).append(r)
-        assert set(by_q) == {0, 1}
-        # zero query scores exactly 0 against every neighbor
-        assert all(r["adc_cosine"] == 0.0 for r in by_q[0])
+    by_q = {}
+    for r in ivfpq_index_knn(spark, path, q, k=3, n_probe=4).collect():
+        assert not math.isnan(r["adc_cosine"]), r
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert set(by_q) == {0, 1}
+    # zero query scores exactly 0 against every neighbor
+    assert all(r["adc_cosine"] == 0.0 for r in by_q[0])

@@ -45,7 +45,7 @@ def connected_components(
     seed and fill inconsistently; an expensive derived plan pays its
     derivation twice). Every in-repo call site passes a pruned
     parquet scan, which is both. Callers with a derived vertex plan
-    should materialize it first (``model_io.materialize_parquet``).
+    should write it to parquet and pass the read-back.
     """
     # materialize the symmetrized edge list ONCE: it is re-joined every
     # round, and without this every round would recompute the upstream
@@ -127,7 +127,6 @@ def count_triangles(
     edges: DataFrame,
     src_col: str = "ea",
     dst_col: str = "eb",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Distributed triangle count over an undirected simple edge list
     (each edge once, ``src < dst``); returns a 1-row ``n_triangles``.
@@ -144,30 +143,15 @@ def count_triangles(
     equi-join); each triangle counted exactly once at its minimum-
     order vertex.
 
-    ``scratch_dir`` — Cohen's store-each-derived-relation step: when
-    set, the oriented arc relation is materialized ONCE to
-    ``{scratch_dir}/tri_arcs`` (parquet write + read-back, see
-    :func:`~.model_io.materialize_parquet`) before fanning out to its
-    three consumers (the two wedge sides and the closing-edge lookup).
-    Without it those consumers each inline the full arc derivation —
-    degree aggregation joined twice onto the edges — so the EDGE
-    relation executes five times per call (and 15+ times when the
-    edges themselves are a derived plan); measured as 32 source scans
-    in one plan for the co-presence caller. Callers whose ``edges``
-    is itself expensive to derive should materialize it first and
-    pass the read-back (``model_io.materialize_parquet``). The
-    numbers are exact either way — a parquet round-trip of integer
-    keys and counts is bit-identical — and ``scratch_dir=None``
-    (lazy, side-effect-free) is the default.
-
-    WHEN to set it — measured, not assumed (OPTIMIZATION_r13 change
-    2): storing pays only when the graph is sparse enough (or the
-    edge derivation expensive enough) that re-derivation rivals the
-    wedge work. On the repo's co-presence fixture the graph is
-    COMPLETE, wedge compute is O(n^3) and dominates every scale
-    point, and AQE overlaps the re-derivation stages inside the one
-    DAG — there the lazy form measured faster at sf0.1 AND at 2x
-    volume, so the catalog entry stays lazy.
+    The plan stays lazy: the oriented arc relation feeds three
+    consumers (the two wedge sides and the closing-edge lookup), and
+    each inlines the arc derivation, so the EDGE relation executes
+    five times per call. Storing the arcs once as parquet (Cohen's
+    store-each-derived-relation step) was measured slower on the
+    co-presence fixture at sf0.1 and at 2x volume (OPTIMIZATION_r13
+    change 2): that graph is complete, wedge compute is O(n^3) and
+    dominates, and AQE overlaps the re-derivation stages inside the
+    one DAG.
     """
     e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     deg = (
@@ -188,29 +172,9 @@ def count_triangles(
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("hi"),
         F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("hi_d"),
     )
-    probe = arcs
-    if scratch_dir is not None:
-        from .model_io import materialize_parquet
-
-        arcs = materialize_parquet(arcs, f"{scratch_dir}/tri_arcs")
-        # The stored arc relation is BYTES-small (two ids + a count per
-        # edge) but COMPUTE-explosive: the wedge join emits O(out-deg)
-        # rows per arc. Size-based planning sees only the bytes — it
-        # broadcasts the build side (fine: no shuffle of the huge wedge
-        # stream) but leaves the probe side at file-split parallelism
-        # (one ~10 MB file ≈ 1-8 tasks doing ALL the wedge expansion;
-        # measured 180 s vs 66 s at sf0.1). Pin the probe side to the
-        # session's shuffle parallelism with an EXPLICIT partition
-        # count — AQE never coalesces a user-specified N, so the
-        # expansion keeps cluster-wide parallelism at any scale while
-        # the repartition itself moves only the tiny arc relation.
-        n_shuffle = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        probe = arcs.repartition(n_shuffle, "lo")
     # wedges at the minimum-order vertex: out-neighbors q1 < q2 in the
     # same (degree, id) order the orientation used
-    a1 = probe.select(
+    a1 = arcs.select(
         F.col("lo").alias("p"), F.col("hi").alias("q1"),
         F.col("hi_d").alias("q1_d"),
     )

@@ -150,29 +150,3 @@ def write_small_parquet(spark, path: str, pdf) -> None:
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def materialize_parquet(df, path: str):
-    """Write ``df`` to parquet at ``path`` and return a fresh scan of
-    it — a BETWEEN-JOBS materialization (Cohen, "Graph Twiddling in a
-    MapReduce World": store each derived relation once, fan consumers
-    out over the stored copy).
-
-    This is the multi-consumer device for relations whose derivation
-    is expensive and whose plan Catalyst would otherwise inline once
-    per consumer. It deliberately is NOT ``localCheckpoint``: the r12
-    negative-result study showed a checkpoint boundary (an
-    ``ExistingRDD``) erases ``sizeInBytes`` statistics — downstream
-    join strategy degrades to defaults — and, under AQE, serializes
-    concurrent broadcast-subtree jobs at plan-build time. A parquet
-    read-back is a normal columnar scan: statistics, column pruning
-    and predicate pushdown all survive for every consumer.
-
-    The read passes ``df.schema`` explicitly so a zero-row relation
-    (whose write may land no part files) reads back as a valid empty
-    scan instead of failing schema inference. Per-invocation scratch
-    paths only — never a cache keyed on the input data (the
-    no-result-caching rule: every invocation re-derives and re-writes).
-    """
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.schema(df.schema).parquet(path)

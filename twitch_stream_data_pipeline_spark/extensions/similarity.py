@@ -1,18 +1,25 @@
 """Similarity search over an embedding column (SURVEY.md §2.9).
 
-Three paths:
+Search paths:
 
 - :func:`cosine_knn` — brute-force top-k, the correctness baseline.
   O(Q x N) but fully distributed: the (small) query set broadcasts,
   candidates never shuffle, and the only wide op is the per-query
   top-k window over Q*N scored rows.
-- :func:`lsh_bucketed_knn` — random-hyperplane LSH buckets candidates
-  so each query scores only its bucket collisions (sub-linear in N for
-  recall < 1).
-- :func:`ivf_knn` — FAISS-style inverted-file coarse quantizer: a
-  trained centroid partition replaces the random buckets; queries
-  probe their ``n_probe`` nearest cells. Equals brute force exactly
-  when probing every cell.
+- :func:`ivf_knn` — FAISS-style inverted-file coarse quantizer:
+  queries probe their ``n_probe`` nearest trained cells. Equals brute
+  force exactly when probing every cell.
+- :func:`build_ivf_index` / :func:`ivf_index_knn` — the same cells
+  materialized as a partitioned parquet layout, probed by partition
+  pruning; :func:`embedding_ingest` gates new vectors against it.
+- :func:`build_ivfpq_index` / :func:`ivfpq_index_knn` — IVF cells
+  holding product-quantization codes on disk, scored by asymmetric
+  distance (ADC) lookups.
+
+Beside search: :func:`semantic_dedup`,
+:func:`group_outlier_scores_scalable`, :func:`embedding_covariance` /
+:func:`pca_project`, and the UDF-tier norm paths
+(:func:`quantized_norm_pandas_udf`, :func:`norms_map_in_arrow`).
 
 Scores use *quantized* integer arithmetic: each float is rounded to
 ``round(x * 1000)`` (bigint) and dot products / norms are exact integer
@@ -152,122 +159,6 @@ def cosine_knn(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.col("neighbor_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _plane_sql(plane: list[int]) -> str:
-    """SQL array literal for one hyperplane (one parser call, not one
-    py4j round trip per element)."""
-    return "array(" + ",".join(f"{p}L" for p in plane) + ")"
-
-
-def _qbucket_sql(qv_sql: str, planes: list[list[int]]) -> str:
-    """Bucket-id SQL over a *named* quantized-vector column.
-
-    Built as a single expression string: the Column-operator form costs
-    2 py4j round trips per plane element (64-dim x 8 planes x 4 tables
-    x 2 sides = ~8k round trips, ~10s of pure driver time per plan
-    build, measured); one string is one round trip and the JVM parses
-    it in milliseconds. Same logical plan either way.
-    """
-    terms = []
-    for i, plane in enumerate(planes):
-        dot = (
-            f"aggregate(zip_with({qv_sql}, {_plane_sql(plane)}, "
-            "(x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-        )
-        terms.append(f"IF({dot} > 0, {1 << i}L, 0L)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def make_planes(dim: int, num_planes: int = 8, table: int = 0) -> list[list[int]]:
-    """Deterministic pseudo-random hyperplanes from md5 bytes (+/-1)."""
-    import hashlib
-
-    planes = []
-    for p in range(num_planes):
-        digest = b""
-        while len(digest) < dim:
-            digest += hashlib.md5(f"t{table}:plane{p}:{len(digest)}".encode()).digest()
-        planes.append([1 if byte & 1 else -1 for byte in digest[:dim]])
-    return planes
-
-
-def _bucket_array(qv_sql: str, dim: int, num_planes: int, num_tables: int) -> Column:
-    """array of (table-local) bucket ids, one per hash table — one
-    F.expr over the whole thing (see :func:`_qbucket_sql`)."""
-    return F.expr(
-        "array("
-        + ",".join(
-            _qbucket_sql(qv_sql, make_planes(dim, num_planes, t))
-            for t in range(num_tables)
-        )
-        + ")"
-    )
-
-
-def lsh_bucketed_knn(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    dim: int = 64,
-    num_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k: score only candidates colliding with the
-    query in at least one of ``num_tables`` LSH tables.
-
-    AND-amplification (num_planes sign bits per bucket) shrinks each
-    table's candidate set ~2^num_planes-fold; OR-amplification
-    (num_tables independent tables) recovers recall. Each side emits
-    ``num_tables`` (table, bucket) keys; the join is keyed on both and
-    deduped per pair before scoring — the 100 TB shape: shuffle carries
-    (id, bucket) pairs, vectors travel only into the final scoring
-    join. Recall vs :func:`cosine_knn` is asserted in tests.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantized_embedding(F.col(vec_col)).alias("q_vec"),
-    ).select(
-        "query_id",
-        "q_vec",
-        _norm2(F.col("q_vec")).alias("q_norm"),
-        F.posexplode(
-            _bucket_array("q_vec", dim, num_planes, num_tables)
-        ).alias("table", "bucket"),
-    )
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantized_embedding(F.col(vec_col)).alias("c_vec"),
-    ).select(
-        "neighbor_id",
-        "c_vec",
-        _norm2(F.col("c_vec")).alias("c_norm"),
-        F.posexplode(
-            _bucket_array("c_vec", dim, num_planes, num_tables)
-        ).alias("table", "bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on=["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _safe_cosine(
-                _dot(F.col("q_vec"), F.col("c_vec")),
-                F.col("q_norm"),
-                F.col("c_norm"),
-            ).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -706,55 +597,6 @@ def ivf_index_knn(
     )
 
 
-def group_outlier_scores(
-    emb: DataFrame,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label embedding outlier scoring via grouped-map
-    ``applyInPandas`` — the §2.8 UDF-surface member that needs a whole
-    group in one frame (centroid + in-group distance distribution are
-    group-global, not per-row or per-batch).
-
-    Each label group arrives as one pandas frame; numpy computes the
-    group centroid, each vector's euclidean distance to it, and the
-    z-score of that distance within the group (the outlier signal a
-    curation pipeline thresholds). Groups are label-sized — the
-    contract is bounded group cardinality, the same assumption any
-    grouped-map training-data op (per-class resampling, per-domain
-    calibration) already makes; the shuffle is one hash partition by
-    label.
-    """
-    import numpy as np
-    import pandas as pd
-
-    schema = f"{id_col} long, {label_col} int, dist double, zdist double"
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Deterministic under any input row order (round-10 order
-        # sweep): the group frame arrives in shuffle/file order, and
-        # numpy's pairwise reductions (mean/std) round differently
-        # per order — sort by the id key so every permutation of the
-        # input computes the identical float chain.
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        centroid = m.mean(axis=0)
-        d = np.sqrt(((m - centroid) ** 2).sum(axis=1))
-        spread = d.std()
-        z = (d - d.mean()) / spread if spread > 0 else np.zeros_like(d)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                label_col: pdf[label_col],
-                "dist": d,
-                "zdist": z,
-            }
-        )
-
-    return emb.groupBy(label_col).applyInPandas(score, schema)
-
-
 def group_outlier_scores_scalable(
     emb: DataFrame,
     label_col: str = "label",
@@ -762,12 +604,13 @@ def group_outlier_scores_scalable(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-label embedding outlier scoring as pure aggregation +
-    broadcast join — the 100-TB-shape twin of
-    :func:`group_outlier_scores`.
+    broadcast join: each vector's euclidean distance to its label
+    centroid, and the z-score of that distance within the label.
 
-    The grouped-map version ships every label group into one pandas
-    frame, so a label with 10^9 members lands on (and OOMs) a single
-    task. The same math decomposes into partial-aggregable pieces:
+    A grouped-map form (``applyInPandas``) would ship every label
+    group into one pandas frame, so a label with 10^9 members lands on
+    (and OOMs) a single task. The math decomposes into
+    partial-aggregable pieces instead:
 
     1. ``posexplode`` the vector and ``groupBy(label, dim)`` for the
        per-dimension centroid — map-side combine collapses each task
@@ -781,8 +624,8 @@ def group_outlier_scores_scalable(
 
     No window, no grouped-map, no per-group memory; every aggregate is
     decimal-routed (order-independent) so the result is bit-stable and
-    oracle-checkable. Matches :func:`group_outlier_scores` to the
-    decimal(25,6) rounding (~1e-6).
+    oracle-checkable. Matches an independent window formulation to
+    the decimal(25,6) rounding (~1e-6, pinned in tests).
     """
     n_dims = F.count("*")
     dims = emb.select(
@@ -913,34 +756,15 @@ def semantic_dedup(
     )
 
 
-def _train_pq_codebooks(
-    candidates: DataFrame,
-    m: int,
-    n_codes: int,
-    train_size: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    sample=None,
-):
+def _train_pq_codebooks(X, m: int, n_codes: int, iters: int):
     """Deterministic per-subvector L2 k-means codebooks (driver-side
     numpy over a bounded sample — model-state-sized, ``m x n_codes x
-    d/m`` doubles). Same training contract as the IVF coarse
-    quantizer: first ``train_size`` candidates by id, vectors unit-
-    normalized from their quantized-int form, fixed init (first
-    ``n_codes`` sample rows), fixed ``iters`` Lloyd rounds.
-    ``sample`` short-circuits the collect with a matrix a caller
-    already holds (:func:`_collect_train_sample`) — identical numerics,
-    one fewer job."""
+    d/m`` doubles). ``X`` is the coarse quantizer's training sample
+    (:func:`_collect_train_sample`: first ``train_size`` candidates
+    by id, quantized-int form), unit-normalized here; fixed init
+    (first ``n_codes`` sample rows), fixed ``iters`` Lloyd rounds."""
     import numpy as np
 
-    X = (
-        sample
-        if sample is not None
-        else _collect_train_sample(candidates, train_size, id_col, vec_col)
-    )
-    if X.size == 0:
-        return np.zeros((m, 0, 0))
     X = _unit_rows(X)
     d = X.shape[1]
     if d % m:
@@ -959,115 +783,6 @@ def _train_pq_codebooks(
                     cent[c] = members.mean(axis=0)
         books.append(cent)
     return np.stack(books)
-
-
-def pq_knn(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    n_codes: int = 16,
-    train_size: int = 256,
-    iters: int = 5,
-) -> DataFrame:
-    """Product-quantization approximate top-k (FAISS PQ / ADC shape,
-    re-expressed as a Spark plan) — the memory-compression axis of the
-    ANN family, complementing IVF's candidate-pruning axis: each unit-
-    normalized vector is encoded as ``m`` one-byte codes (its nearest
-    codebook centroid per d/m-dim subvector), and query-candidate
-    inner products are approximated by Asymmetric Distance
-    Computation — a table lookup per subvector against the query's
-    precomputed ``m x n_codes`` LUT, never a full d-dim dot product.
-    64-dim floats become 8 bytes per vector at m=8: the 100 TB corpus'
-    scoring working set shrinks 32x and the scan becomes
-    memory-bandwidth-, not FLOP-, bound.
-
-    Plan shape (the ivf_knn economics): codebooks train driver-side on
-    a bounded sample (model-state-sized); queries collect under the
-    documented Q << N ANN contract (their LUTs ride into the closure);
-    candidates ENCODE AND SCORE IN ONE Arrow pass — encoding is an
-    argmin against each subvector codebook, ADC scoring is a numpy
-    gather + sum over the code matrix, and candidates never shuffle.
-    Per-query top-k is the standard WindowGroupLimit.
-
-    Exactness property (pinned in tests): when every candidate
-    subvector appears in the codebook (``n_codes >= distinct
-    subvectors``, e.g. candidates ⊆ training sample with enough
-    codes), encoding reconstructs the vector exactly and the ADC
-    score equals the exact normalized dot product. Below that,
-    ``adc_cosine`` is a biased-but-monotone-enough estimate — the
-    standard PQ recall/memory dial. Emits ``query_id, neighbor_id,
-    adc_cosine, rank`` (rows-only by design: the scores are
-    quantization-dependent approximations, like lsh_knn's buckets).
-    """
-    import numpy as np
-    import pandas as pd
-
-    books = _train_pq_codebooks(
-        candidates, m, n_codes, train_size, iters, id_col, vec_col
-    )
-    n_books, n_cent, dsub = books.shape
-
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantized_embedding(F.col(vec_col)).alias("q_vec"),
-    ).collect()  # ANN contract: Q << N
-    if not q_rows or n_cent == 0:  # no queries or no trained codebook
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_cosine double, rank int"
-        )
-    q_ids = [r["query_id"] for r in q_rows]
-    q_mat = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
-    q_mat = _unit_rows(q_mat)
-    # LUT[q, j, c] = <query subvector j, codebook j centroid c>
-    lut = np.einsum(
-        "qjd,jcd->qjc", q_mat.reshape(len(q_ids), n_books, dsub), books
-    )
-    # ||c||^2 term of the encode argmin, precomputed once
-    cent_sq = (books**2).sum(axis=2)  # [m, n_codes]
-
-    def encode_score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            C = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
-            C = _unit_rows(C)
-            S = C.reshape(len(C), n_books, dsub)
-            # argmin ||s - c||^2 = argmin ||c||^2 - 2 s.c per subvector
-            dots = np.einsum("bjd,jcd->bjc", S, books)
-            codes = (cent_sq[None, :, :] - 2.0 * dots).argmin(axis=2)
-            # ADC: sum over subvectors of LUT[q, j, codes[b, j]]
-            scores = lut[:, np.arange(n_books)[None, :], codes].sum(axis=2)
-            n_q, n_b = scores.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.array(q_ids, dtype=np.int64), n_b),
-                    "neighbor_id": np.tile(ids, n_q),
-                    "adc_cosine": scores.reshape(-1),
-                }
-            )
-
-    scored = (
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            quantized_embedding(F.col(vec_col)).alias("c_vec"),
-        )
-        .mapInPandas(
-            encode_score, "query_id long, neighbor_id long, adc_cosine double"
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
-    )
 
 
 def quantized_norm_pandas_udf():
@@ -1099,117 +814,6 @@ def quantized_norm_pandas_udf():
     # module global here, so infer_eval_type could not resolve them)
     qnorm.__annotations__ = {"v": pd.Series, "return": pd.Series}
     return pandas_udf(qnorm, "long")
-
-
-def ivfpq_knn(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    train_size: int = 256,
-    iters: int = 5,
-) -> DataFrame:
-    """IVF + PQ composed — the standard billion-scale FAISS deployment
-    shape: the coarse quantizer prunes WHICH candidates each query
-    scores (:func:`ivf_knn`'s candidate-pruning axis), PQ/ADC
-    compresses HOW each surviving candidate is scored
-    (:func:`pq_knn`'s memory axis). At 100 TB both axes matter at
-    once: a query touches ``n_probe/n_cells`` of the corpus, and what
-    it touches streams as one-byte codes instead of full vectors.
-
-    One Arrow pass does cell assignment, PQ encoding, ADC scoring, and
-    probe masking per batch; candidates never shuffle, and both models
-    (centroids + codebooks) are driver-trained on the same bounded
-    sample contract. Scoring uses plain-vector PQ (not FAISS's
-    residual encoding — the production refinement that re-centers each
-    cell before coding; plain coding keeps the exactness property
-    testable: at ``n_probe == n_cells`` with a covering codebook the
-    output equals :func:`cosine_knn` exactly, asserted in tests).
-    Emits ``query_id, neighbor_id, adc_cosine, rank`` (rows-only by
-    design, like the other approximate ANN members).
-    """
-    import numpy as np
-    import pandas as pd
-
-    cent = _train_coarse_quantizer(
-        candidates, n_cells, train_size, iters, id_col, vec_col
-    )
-    books = _train_pq_codebooks(
-        candidates, m, n_codes, train_size, iters, id_col, vec_col
-    )
-    n_books, n_cent, dsub = books.shape
-
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantized_embedding(F.col(vec_col)).alias("q_vec"),
-    ).collect()  # ANN contract: Q << N
-    if not q_rows or cent.size == 0 or n_cent == 0:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_cosine double, rank int"
-        )
-    q_ids = [r["query_id"] for r in q_rows]
-    q_mat = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
-    q_mat = _unit_rows(q_mat)
-    probe_order = np.argsort(-(q_mat @ cent.T), axis=1, kind="stable")
-    probes = {
-        qid: frozenset(probe_order[i, :n_probe].tolist())
-        for i, qid in enumerate(q_ids)
-    }
-    lut = np.einsum(
-        "qjd,jcd->qjc", q_mat.reshape(len(q_ids), n_books, dsub), books
-    )
-    cent_sq = (books**2).sum(axis=2)
-
-    def assign_encode_score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            C = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
-            C = _unit_rows(C)
-            cells = (C @ cent.T).argmax(axis=1)
-            S = C.reshape(len(C), n_books, dsub)
-            dots = np.einsum("bjd,jcd->bjc", S, books)
-            codes = (cent_sq[None, :, :] - 2.0 * dots).argmin(axis=2)
-            scores = lut[:, np.arange(n_books)[None, :], codes].sum(axis=2)
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(cells, list(probes[qid]))
-                out_q.append(np.full(int(mask.sum()), qid, dtype=np.int64))
-                out_n.append(ids[mask])
-                out_s.append(scores[qi, mask])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_cosine": np.concatenate(out_s),
-                }
-            )
-
-    scored = (
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            quantized_embedding(F.col(vec_col)).alias("c_vec"),
-        )
-        .mapInPandas(
-            assign_encode_score,
-            "query_id long, neighbor_id long, adc_cosine double",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
-    )
 
 
 def norms_map_in_arrow(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -1554,7 +1158,7 @@ def build_ivfpq_index(
     64-dim floats become 8 bytes, so the scored working set shrinks
     ~32x and scanning is bandwidth-bound). Both models train
     driver-side on the same bounded sample contract as
-    :func:`build_ivf_index` / :func:`pq_knn`, and probes reload them
+    :func:`build_ivf_index`, and probes reload them
     from disk — an append or probe can never quantize differently
     than the layout (the persisted-model rule).
     """
@@ -1573,10 +1177,7 @@ def build_ivfpq_index(
     )
     if len(cent) == 0:
         raise ValueError("build_ivfpq_index: candidates are empty")
-    books = _train_pq_codebooks(
-        candidates, m, n_codes, train_size, iters, id_col, vec_col,
-        sample=sample,
-    )
+    books = _train_pq_codebooks(sample, m, n_codes, iters)
     write_partitioned(
         _cluster_write(_assign_encode(candidates, cent, books, id_col, vec_col)),
         path, ["cell"], mode="overwrite",
@@ -1684,9 +1285,8 @@ def ivfpq_index_knn(
     ``m x n_codes`` LUTs against the persisted codebooks; scoring is
     one Arrow gather+sum over the code matrix per batch; candidates
     never shuffle. At ``n_probe == n_cells`` with a covering codebook
-    the result equals brute-force cosine exactly (pinned in tests,
-    along with equality to the in-memory :func:`ivfpq_knn` under the
-    same parameters — same sample, same models, same scores).
+    the result equals brute-force cosine exactly (pinned in tests);
+    ``n_cells=1`` makes it plain PQ search.
     """
     import numpy as np
     import pandas as pd

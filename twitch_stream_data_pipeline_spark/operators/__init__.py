@@ -8,19 +8,10 @@ nearest-slot rounding instead of the reference's linear scans.
 """
 
 from .cleaning import empty_to_sentinel, sentinel_to_null, valid_integer_ids
-from .dedup import dedup_keep_first, dedup_keys, distinct_rows
-from .joins import (
-    broadcast_lookup,
-    delta_new_rows,
-    left_join_default,
-    missing_keys,
-    nearest_slot_id,
-    positional_join,
-)
+from .dedup import dedup_keep_first
+from .joins import nearest_slot_id, positional_join
 from .aggregates import (
-    category_popularity,
     dq_check,
-    min_by_group,
     profile_columns,
     salted_count_distinct,
     skew_report,
@@ -53,18 +44,10 @@ __all__ = [
     "sentinel_to_null",
     "valid_integer_ids",
     "dedup_keep_first",
-    "dedup_keys",
-    "distinct_rows",
-    "broadcast_lookup",
-    "delta_new_rows",
-    "left_join_default",
-    "missing_keys",
     "nearest_slot_id",
     "positional_join",
-    "category_popularity",
     "profile_columns",
     "salted_count_distinct",
-    "min_by_group",
     "upsert_state",
     "pack_into_groups",
 ]

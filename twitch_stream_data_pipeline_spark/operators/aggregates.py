@@ -12,32 +12,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def category_popularity(streams: DataFrame, key: str = "category_id") -> DataFrame:
-    """Streams per category, most popular first (A1 + O1).
-
-    Reference: ``groupby(category_id).agg(num_of_streamers=count)`` +
-    sort desc (``scripts/other/get_category_popularity.py:23-26``).
-    """
-    return (
-        streams.groupBy(key)
-        .agg(F.count("stream_id").alias("num_of_streamers"))
-        .orderBy(F.desc("num_of_streamers"), key)
-    )
-
-
-def min_by_group(
-    df: DataFrame, keys: list[str], value: Column | str, payload: Column | str
-) -> DataFrame:
-    """Argmin aggregate: payload at minimal value per group (A5).
-
-    Reference: running minimum scan over the 96-slot grid
-    (``scripts/get_raw_data/get_raw_categories_data.py:61-69``).
-    """
-    return df.groupBy(*keys).agg(
-        F.min_by(payload, value).alias("argmin"), F.min(value).alias("min_value")
-    )
-
-
 def salted_count_distinct(
     df: DataFrame,
     keys: list[str],

@@ -2,10 +2,9 @@
 
 pandas ``drop_duplicates(keep="first")`` is order-dependent; at scale
 "first" must be an explicit tiebreak, so :func:`dedup_keep_first`
-ranks with ``row_number`` over an explicit ordering. Plain
-``dropDuplicates`` (any winner) is exposed separately because it is
-cheaper — it needs no sort within groups and map-side partial
-aggregation applies.
+ranks with ``row_number`` over an explicit ordering. Where any winner
+will do, the pipeline calls ``dropDuplicates`` directly: it needs no
+sort within groups and map-side partial aggregation applies.
 """
 
 from __future__ import annotations
@@ -14,16 +13,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Dedup by key subset, arbitrary winner (A2 when order is irrelevant).
-
-    Reference: drop_duplicates(subset=[...]) at
-    scripts/process_raw_data/process_raw_streams_data.py:120,
-    scripts/curate_data/curate_streams_data.py:48.
-    """
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_keep_first(
@@ -41,11 +30,3 @@ def dedup_keep_first(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def distinct_rows(df: DataFrame) -> DataFrame:
-    """Full-row dedup (A3): drop_duplicates() ->  distinct().
-
-    Reference: scripts/process_raw_data/process_raw_categories_data.py:61.
-    """
-    return df.distinct()

@@ -15,53 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_lookup(
-    fact: DataFrame, dim: DataFrame, on: str | Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """Lookup join against a small dimension (J1).
-
-    Replaces the reference's per-row boolean-mask probe
-    (``scripts/process_raw_data/process_raw_genre_bridge_data.py:46-50``,
-    O(n*m)) with a broadcast hash join: the dim ships to every task,
-    the fact side never shuffles.
-    """
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
-def left_join_default(
-    fact: DataFrame,
-    other: DataFrame,
-    on: str | Sequence[str],
-    defaults: dict[str, float | int | str],
-) -> DataFrame:
-    """Left outer join + fill defaults for misses (J2 + P9).
-
-    Reference: ``pd.merge(curr, popularity, how='left')`` + fillna(1)
-    (``scripts/other/create_category_group_messages.py:107-108``).
-    """
-    return fact.join(F.broadcast(other), on=on, how="left").fillna(defaults)
-
-
-def missing_keys(new: DataFrame, known: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Left anti join: keys needing work = new − known (J3).
-
-    Reference: ``set(stream_ids).difference(set(current_ids))``
-    (``scripts/get_raw_data/get_raw_users_data.py:126-134``).
-    """
-    return new.join(known, on=on, how="left_anti")
-
-
-def delta_new_rows(new_state: DataFrame, old_state: DataFrame) -> DataFrame:
-    """Full-row delta: rows in new_state not in old_state (J4/U2).
-
-    Reference computes a symmetric difference via concat +
-    ``drop_duplicates(keep=False)`` (``scripts/curate_data/
-    curate_categories_data.py:70-77``), which is only correct because
-    new_state ⊇ old_state; ``exceptAll`` states the real intent.
-    """
-    return new_state.exceptAll(old_state)
-
-
 def _slot_pieces(ts: Column) -> tuple[Column, Column, Column]:
     """(secs, day_secs, rollover) for reference-exact slot mapping."""
     secs = F.unix_timestamp(ts)

@@ -17,12 +17,7 @@ from .streams import process_raw_streams, curate_streams
 from .categories import process_raw_categories, curate_categories
 from .users import process_raw_users, curate_users
 from .bridges import process_raw_bridge, curate_bridge
-from .dims import (
-    curate_game_modes,
-    curate_genres,
-    process_raw_game_modes,
-    process_raw_genres,
-)
+from .dims import curate_igdb_dim, process_raw_igdb_dim
 
 __all__ = [
     "process_raw_streams",
@@ -33,10 +28,8 @@ __all__ = [
     "curate_users",
     "process_raw_bridge",
     "curate_bridge",
-    "process_raw_genres",
-    "curate_genres",
-    "process_raw_game_modes",
-    "curate_game_modes",
+    "process_raw_igdb_dim",
+    "curate_igdb_dim",
     "list_partition_values",
     "unprocessed_partitions",
     "run_incremental",

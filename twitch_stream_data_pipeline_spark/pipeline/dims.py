@@ -43,19 +43,3 @@ def curate_igdb_dim(processed: DataFrame, id_col: str, name_col: str) -> DataFra
         [("NA", "Not Available")], f"{id_col} string, {name_col} string"
     )
     return two.unionByName(sentinel)
-
-
-def process_raw_genres(records: DataFrame) -> DataFrame:
-    return process_raw_igdb_dim(records, "genre_id", "genre_name")
-
-
-def curate_genres(processed: DataFrame) -> DataFrame:
-    return curate_igdb_dim(processed, "genre_id", "genre_name")
-
-
-def process_raw_game_modes(records: DataFrame) -> DataFrame:
-    return process_raw_igdb_dim(records, "game_mode_id", "game_mode_name")
-
-
-def curate_game_modes(processed: DataFrame) -> DataFrame:
-    return curate_igdb_dim(processed, "game_mode_id", "game_mode_name")

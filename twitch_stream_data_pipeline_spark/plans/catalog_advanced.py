@@ -112,9 +112,9 @@ def q_pagerank_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ivfpq_index_knn",
-    None,  # approximate by construction (PQ quantization), like
-    # pq_knn/ivfpq_knn; disk==memory equality, covering-codebook
-    # exactness vs cosine, PartitionFilters pruning, and the append
+    None,  # approximate by construction (PQ quantization);
+    # covering-codebook exactness vs cosine, PartitionFilters pruning,
+    # pure-PQ (n_cells=1) recall, and the append
     # contract (models byte-identical, both generations probed)
     # pinned in tests/test_pq_knn.py
     ("similarity", "ext", "ivf", "pq", "index"),
@@ -176,7 +176,7 @@ def q_ivfpq_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "can differ in the last ulp — both sides ROUND to 6 decimals "
     "(the catalog's decimal-routing determinism rule). Recall at "
     "production parameters stays covered by ivfpq_index_knn + the "
-    "disk==memory / append contracts in tests/test_pq_knn.py.",
+    "recall / append contracts in tests/test_pq_knn.py.",
 )
 def q_ivfpq_index_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -557,16 +557,14 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the "obvious" fixes for its 32 inlined edge-list derivations:
     # the r12 localCheckpoint pin ran 66->78 s at sf0.1 (stats erasure
     # + AQE job serialization, OPTIMIZATION_r12 change 7), and the r13
-    # Cohen parquet materialization (count_triangles' scratch_dir,
-    # kept as a tested operator option) ran 61.5->64.5 s at sf0.1 and
-    # 492->601 s at the 2x sibling: on THIS fixture the co-presence
+    # Cohen parquet materialization of the arc relation ran
+    # 61.5->64.5 s at sf0.1 and 492->601 s at the 2x sibling, so that
+    # option was removed: on THIS fixture the co-presence
     # graph is COMPLETE (density 1.000), wedge compute is O(n^3) and
     # dominates every scale point, and AQE overlaps the re-derivation
     # stages inside the one DAG while a materialization is a serial
-    # write barrier behind the overlap join's skewed-slot straggler.
-    # scratch_dir is the right call only when the graph is sparse
-    # enough that derivation rivals wedge work (OPTIMIZATION_r13
-    # change 2 has the full study).
+    # write barrier behind the overlap join's skewed-slot straggler
+    # (OPTIMIZATION_r13 change 2 has the full study).
     return e.agg(F.count("*").alias("n_edges")).crossJoin(
         count_triangles(e)
     )

@@ -307,30 +307,6 @@ def q_count_distinct_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "approx_distinct_users",
-    None,  # HLL sketches are engine-specific by design; driver checks rows-only
-    ("aggregate", "sketch", "approx"),
-    "HyperLogLog++ approximate COUNT(DISTINCT) per event_type beside the "
-    "exact count. At 100 TB the sketch is the scale path: mergeable partial "
-    "state, no exact-distinct shuffle of the key universe. SUPERSEDED "
-    "for driver grading (last driver run r02, no_oracle by design — "
-    "HLL estimates are engine-specific): the exact-distinct semantics "
-    "are driver-graded via count_distinct_star (green r01-r05) and "
-    "salted_distinct_users (green r03-r05); the sketch itself is "
-    "covered by the hll_mergeable_rollup property tests (merge "
-    "associativity, error bound). This entry stays as the "
-    "approx-aggregate API surface.",
-)
-def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.01).alias("approx_users"),
-        F.countDistinct("user_id").alias("exact_users"),
-        F.count("*").alias("n_events"),
-    )
-
-
 _ASOF_WIN = (
     "OVER (PARTITION BY user_id ORDER BY ts_us, event_id "
     "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
@@ -2404,28 +2380,6 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "pq_knn",
-    None,  # approximate by construction; exact-reconstruction ADC
-    # equality and recall vs cosine_knn asserted in tests
-    ("similarity", "ext", "pq"),
-    "Product-quantization approximate top-5 (FAISS PQ/ADC shape: "
-    "per-subvector codebooks, one-byte codes, LUT-gather asymmetric "
-    "distance scoring in a single Arrow encode+score pass) — the "
-    "memory-compression axis of the ANN family: 64-dim floats become "
-    "m=8 bytes, so 100 TB of vectors score from a 32x smaller, "
-    "bandwidth-bound working set. Complements IVF's candidate-pruning "
-    "axis; composing the two (IVF cells + PQ codes per cell) is the "
-    "standard billion-scale FAISS deployment.",
-)
-def q_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..extensions.similarity import pq_knn
-
-    emb = _emb(spark, sf_dir)
-    return pq_knn(emb.filter(F.col("vec_id") < 10), emb, k=5)
-
-
-
-@_register(
     "anomaly_slots",
     """
     WITH s AS (
@@ -2505,27 +2459,6 @@ def q_vector_norm_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         qnorm(quantized_embedding(F.col("embedding"))).alias("qnorm"),
     )
-
-
-
-@_register(
-    "ivfpq_knn",
-    None,  # approximate by construction; composed exactness (probe-all
-    # + covering codebook == cosine_knn) asserted in tests
-    ("similarity", "ext", "ivf", "pq"),
-    "IVF + PQ composed approximate top-5 — the standard billion-scale "
-    "FAISS deployment: the coarse quantizer prunes WHICH candidates "
-    "each query scores (n_probe=4 of 16 cells), PQ/ADC compresses HOW "
-    "the survivors are scored (m=8 one-byte codes, LUT-gather "
-    "asymmetric distance). One Arrow pass assigns, encodes, scores, "
-    "and probe-masks per batch; candidates never shuffle; both models "
-    "train driver-side on the bounded sample contract.",
-)
-def q_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..extensions.similarity import ivfpq_knn
-
-    emb = _emb(spark, sf_dir)
-    return ivfpq_knn(emb.filter(F.col("vec_id") < 10), emb, k=5)
 
 
 

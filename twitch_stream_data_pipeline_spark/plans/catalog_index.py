@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..extensions.multimodal import attach_binary_payload, binary_meta, extract_features
-from ..extensions.similarity import cosine_knn, ivf_knn, lsh_bucketed_knn
+from ..extensions.multimodal import attach_binary_payload, binary_meta
+from ..extensions.similarity import cosine_knn, ivf_knn
 from .catalog_base import (
     _register,
     _docs,
@@ -106,23 +106,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "lsh_knn",
-    None,  # approximate by construction; verified against cosine_knn in tests
-    ("similarity", "ext", "lsh"),
-    "LSH-bucketed approximate top-5 (random-hyperplane buckets) — the "
-    "sub-linear scale path; recall asserted against cosine_knn in tests. "
-    "SUPERSEDED for driver grading (last driver run r02, no_oracle by "
-    "design): the machinery's oracle-graded twins are cosine_knn (the "
-    "exact scorer it approximates, green r01-r05) and lsh_index_probe "
-    "(the materialized LSH layout, green r06-r07); this entry stays for "
-    "the in-memory approximate API surface, pytest-covered.",
-)
-def q_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    return lsh_bucketed_knn(emb.filter(F.col("vec_id") < 10), emb, k=5)
-
-
-@_register(
     "embedding_centroid",
     f"""
     WITH q AS (SELECT label, {_QVEC} AS qv FROM embeddings),
@@ -155,26 +138,6 @@ def q_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("v").cast("double") / F.count("*")).alias("centroid"),
         F.count("*").alias("n_vectors"),
     )
-
-
-@_register(
-    "group_outliers",
-    None,  # grouped-map numpy op; agreement with an independent
-    # column-expression formulation asserted to 1e-9 in tests
-    ("similarity", "udf", "ext"),
-    "Per-label embedding outlier scoring (centroid distance + in-group "
-    "z-score) via grouped-map applyInPandas — the whole-group-in-one-"
-    "frame member of the UDF surface (SURVEY.md 2.8). SUPERSEDED for "
-    "driver grading (last driver run r02, no_oracle by design): "
-    "group_outliers_scalable states the SAME computation as "
-    "oracle-checkable relational ops and is driver-green (r06-r07); "
-    "this entry stays as the grouped-map API demonstration, with "
-    "1e-9 agreement between the two pinned in tests.",
-)
-def q_group_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..extensions.similarity import group_outlier_scores
-
-    return group_outlier_scores(_emb(spark, sf_dir))
 
 
 @_register(
@@ -212,8 +175,8 @@ def q_group_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d JOIN stats ON d.label = stats.label
     """,
     ("similarity", "agg", "join", "ext"),
-    "Per-label embedding outlier scoring restated as partial-aggregable "
-    "groupBy + broadcast joins (the 100-TB shape of group_outliers): "
+    "Per-label embedding outlier scoring (centroid distance + in-group "
+    "z-score) as partial-aggregable groupBy + broadcast joins: "
     "posexplode -> per-dim decimal centroid -> distance keyed on the "
     "high-cardinality vec_id -> broadcast label stats. No grouped-map, "
     "no per-group memory, fully oracle-checkable.",
@@ -450,29 +413,6 @@ def q_embedding_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return binary_meta(attach_binary_payload(docs))
-
-
-@_register(
-    "multimodal_features",
-    None,  # python-side stub decoder — rows-only check
-    ("multimodal", "ext"),
-    "Arrow-batched (mapInPandas) feature extraction over binary payloads with "
-    "the STUBBED decoder — exercises schema/batch plumbing end to end. "
-    "SUPERSEDED for driver grading (last driver run r02, no_oracle by "
-    "design): multimodal_decode states the decode+pool pipeline in "
-    "oracle-checkable JVM byte ops and is driver-green (r06-r07); "
-    "this entry stays as the Python-batch plumbing surface for real "
-    "decoders (image/audio libs), pytest-covered.",
-)
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    feats = extract_features(attach_binary_payload(docs))
-    return feats.select(
-        "doc_id",
-        "n_bytes",
-        "payload_md5",
-        F.round(F.element_at("features", 1), 6).alias("f0"),
-    )
 
 
 @_register(

@@ -239,20 +239,3 @@ GAME_MODES = T.StructType(
         T.StructField("game_mode_name", T.StringType()),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# Driver synthetic star schema (/root/testdata, FIXTURES.md §B)
-# ---------------------------------------------------------------------------
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -3,9 +3,7 @@
 from .star import (
     DASHBOARD_SQL,
     dashboard_query,
-    load_star,
     register_curated_star,
-    register_star_views,
 )
 from .json_envelope import read_envelope_records
 from .csv_source import read_csv_reference
@@ -15,9 +13,7 @@ from .paged_api import PagedEnvelopeDataSource
 __all__ = [
     "DASHBOARD_SQL",
     "dashboard_query",
-    "load_star",
     "register_curated_star",
-    "register_star_views",
     "read_envelope_records",
     "read_csv_reference",
     "day_dates_dim",

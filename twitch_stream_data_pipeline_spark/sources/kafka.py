@@ -3,7 +3,8 @@
 The reference ingests via SQS-triggered Lambdas polling a REST API
 (SURVEY.md §2.1); at 100 TB the same role is a Kafka topic consumed by
 Structured Streaming. The source wiring is the standard
-``readStream.format("kafka")`` option set; the *parse* step — Kafka's
+``readStream.format("kafka")`` option set (:func:`kafka_options`,
+handed to ``readStream.options``); the *parse* step — Kafka's
 binary ``value`` envelope into typed columns — is a pure DataFrame
 transform, factored out so it is testable on static data without a
 broker (no Kafka broker or connector jar ships in this environment;
@@ -12,7 +13,7 @@ the option shape is pinned by an arg test like the JDBC sink's).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,20 +60,3 @@ def parse_kafka_envelope(
         F.col("offset").alias("kafka_offset"),
         F.col("timestamp").alias("kafka_ts"),
     ).select("r.*", "kafka_key", "kafka_partition", "kafka_offset", "kafka_ts")
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    value_schema: T.StructType | str,
-    starting_offsets: str = "latest",
-    max_offsets_per_trigger: int | None = 100_000,
-) -> DataFrame:
-    """Streaming scan of a Kafka topic parsed to typed columns."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_options(
-        brokers, topic, starting_offsets, max_offsets_per_trigger
-    ).items():
-        reader = reader.option(k, v)
-    return parse_kafka_envelope(reader.load(), value_schema)

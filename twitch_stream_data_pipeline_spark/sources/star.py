@@ -1,39 +1,14 @@
-"""Parquet star-schema loader for the driver testdata (FIXTURES.md §B).
+"""The curated star as SQL views, and the dashboard queries over it.
 
-Parquet is the engine-native storage layer: the reference's
-processed/curated CSV layers (SURVEY.md §1.1) become partitioned
-parquet here so scans get predicate pushdown, column pruning, and
-partition pruning for free. At 100 TB the fact tables are partitioned
-by date (``day_date_id`` analog) so a dashboard query touching one day
-reads ~1/1000 of the data.
+:func:`register_curated_star` names the curated streams fact and its
+dimensions as temp views; :data:`DASHBOARD_SQL` holds the dashboard
+tiles the reference serves from that star, and :func:`dashboard_query`
+runs one of them.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import TESTDATA_TABLES
-
-
-def load_star(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load each parquet table of the synthetic star schema."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in tables
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
-    }
-
-
-def register_star_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view so plans can be written in SQL."""
-    dfs = load_star(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 #: The dashboard layer's headline queries (SURVEY.md §2.5; the
