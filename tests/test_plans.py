@@ -274,6 +274,41 @@ def test_group_outliers_scalable_shape(spark):
     assert "partial_sum" in plan, plan
 
 
+def test_group_outliers_scalable_matches_grouped_map(spark):
+    """The aggregation+broadcast formulation agrees with a grouped-map
+    numpy formulation (whole label group in one pandas frame) to the
+    decimal(25,6) routing tolerance."""
+    import numpy as np
+    import pandas as pd
+
+    from twitch_stream_data_pipeline_spark.extensions.similarity import (
+        group_outlier_scores_scalable,
+    )
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+        d = np.sqrt(((m - m.mean(axis=0)) ** 2).sum(axis=1))
+        spread = d.std()
+        z = (d - d.mean()) / spread if spread > 0 else np.zeros_like(d)
+        return pd.DataFrame(
+            {"vec_id": pdf["vec_id"], "label": pdf["label"], "dist": d, "zdist": z}
+        )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    grouped = emb.groupBy("label").applyInPandas(
+        score, "vec_id long, label int, dist double, zdist double"
+    )
+    a = {r["vec_id"]: r for r in grouped.collect()}
+    b = {r["vec_id"]: r for r in group_outlier_scores_scalable(emb).collect()}
+    assert set(a) == set(b)
+    for vid, ra in a.items():
+        rb = b[vid]
+        assert ra["label"] == rb["label"]
+        assert abs(ra["dist"] - rb["dist"]) < 1e-3, (vid, ra, rb)
+        assert abs(ra["zdist"] - rb["zdist"]) < 1e-3, (vid, ra, rb)
+
+
 def test_aqe_splits_skewed_join_partitions(spark):
     """The engine's skew story for fact-x-fact joins is AQE: a join key
     holding most of the rows must be split into multiple tasks at
