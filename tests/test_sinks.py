@@ -708,7 +708,6 @@ def test_read_partitioned_verbatim_serialized_and_restores_conf(spark, tmp_path)
     assert spark.conf.get(conf_key) == before
 
 
-
 def test_index_layouts_compact_with_standard_lake_maintenance(spark, tmp_path):
     """The standing-index maintenance story: a 15-minute ingest cadence
     appends one file per band/cell directory per batch, and the SAME
@@ -788,227 +787,6 @@ def test_index_layouts_compact_with_standard_lake_maintenance(spark, tmp_path):
     postings = spark.read.parquet(path)
     assert postings.count() == postings.distinct().count()
 
-    # the flat _ids relation fragments too (one file per append) and
-    # has no partition column for compact_partitions to key on — its
-    # maintenance twin collapses it to one file with identical rows,
-    # and the scratch sibling is cleaned up
-    from twitch_stream_data_pipeline_spark.sinks import compact_flat_relation
-
-    ids_dir = f"{path}/_ids"
-    assert len(glob.glob(os.path.join(ids_dir, "*.parquet"))) >= 4
-    compact_flat_relation(spark, ids_dir)
-    assert len(glob.glob(os.path.join(ids_dir, "*.parquet"))) == 1
-    assert (
-        sorted(map(tuple, spark.read.parquet(ids_dir).collect()))
-        == models_before[1]
-    )
-    assert not os.path.exists(f"{ids_dir}__compacting")
-    assert (
-        sorted(map(tuple, lsh_index_probe(spark, path, queries).collect()))
-        == before_probe
-    )
-
-
-def test_compact_flat_relation_retry_protocol(spark, tmp_path):
-    """The crash-safety claim, exercised: (a) a COMMITTED scratch
-    sibling with a truncated target — the overwrite-back crash window
-    — must be treated as the recovery copy, never overwritten by
-    re-staging the damaged target; (b) an UNCOMMITTED scratch leftover
-    is discarded and the intact target re-staged; (c) target_files is
-    honored on the FINAL write, not just the staging one."""
-    import glob
-    import os
-    import shutil
-
-    from twitch_stream_data_pipeline_spark.sinks import compact_flat_relation
-
-    path = str(tmp_path / "rel")
-    rows = [(i, f"v{i}") for i in range(20)]
-    spark.createDataFrame(rows, "id long, v string").repartition(
-        4
-    ).write.parquet(path)
-    want = sorted(map(tuple, rows))
-
-    # (a) committed scratch + truncated target: simulate a crash after
-    # stage committed, mid-overwrite-back
-    tmp = path + "__compacting"
-    spark.read.parquet(path).repartition(1).write.parquet(tmp)
-    assert os.path.exists(f"{tmp}/_SUCCESS")
-    shutil.rmtree(path)
-    os.makedirs(path)  # empty, uncommitted target — the crash state
-    compact_flat_relation(spark, path)
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-    assert not os.path.exists(tmp)
-
-    # (b) uncommitted scratch leftover (no _SUCCESS): target is intact,
-    # the leftover must be discarded, compaction proceeds normally
-    os.makedirs(f"{tmp}/garbage")
-    compact_flat_relation(spark, path)
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-    assert not os.path.exists(tmp)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
-
-    # (c) target_files sizes the final layout
-    compact_flat_relation(spark, path, target_files=3)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 3
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-
-
-def test_compact_flat_relation_resume_guard(spark, tmp_path):
-    """ADVICE r7: a committed scratch is the recovery source only
-    while the target has not advanced past it. (d) target _SUCCESS
-    newer + equal row counts = the overwrite-back completed and only
-    the cleanup crashed -> drop the scratch, touch nothing; (e) target
-    _SUCCESS newer + DIFFERENT counts = appends interleaved with the
-    crashed compaction -> refuse loudly, both copies preserved
-    (resuming would silently drop the interleaved appends)."""
-    import glob
-    import os
-    import time
-
-    import pytest as _pytest
-
-    from twitch_stream_data_pipeline_spark.sinks import compact_flat_relation
-
-    rows = [(i, f"v{i}") for i in range(20)]
-    want = sorted(map(tuple, rows))
-
-    # (d) completed overwrite-back, crashed before scratch cleanup
-    path = str(tmp_path / "done")
-    tmp = path + "__compacting"
-    spark.createDataFrame(rows, "id long, v string").repartition(
-        4
-    ).write.parquet(path)
-    spark.read.parquet(path).repartition(1).write.parquet(tmp)
-    old = time.time() - 3600
-    os.utime(f"{tmp}/_SUCCESS", (old, old))  # scratch committed FIRST
-    n_files = len(glob.glob(os.path.join(path, "*.parquet")))
-    compact_flat_relation(spark, path)
-    assert not os.path.exists(tmp)  # cleanup finished the job
-    # and the target was NOT rewritten from the scratch (file layout
-    # untouched proves the skip path ran, not a resume)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == n_files
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-
-    # (e) appends landed after the scratch committed: refuse
-    path2 = str(tmp_path / "advanced")
-    tmp2 = path2 + "__compacting"
-    spark.createDataFrame(rows, "id long, v string").write.parquet(path2)
-    spark.read.parquet(path2).repartition(1).write.parquet(tmp2)
-    os.utime(f"{tmp2}/_SUCCESS", (old, old))
-    extra = [(100, "appended"), (101, "appended")]
-    spark.createDataFrame(extra, "id long, v string").write.mode(
-        "append"
-    ).parquet(path2)  # the interleaved ingest append (bumps _SUCCESS)
-    with _pytest.raises(RuntimeError, match="refusing to resume"):
-        compact_flat_relation(spark, path2)
-    # both copies preserved for the operator
-    assert os.path.exists(f"{tmp2}/_SUCCESS")
-    assert sorted(map(tuple, spark.read.parquet(path2).collect())) == sorted(
-        want + [tuple(r) for r in extra]
-    )
-
-    # (f) ADVICE r8: an append landing in the SAME mtime tick as the
-    # scratch commit (second-granularity _SUCCESS mtimes) must hit the
-    # row-count comparison and refuse, not fall through to the
-    # overwrite-back that would silently drop it
-    path3 = str(tmp_path / "same_tick")
-    tmp3 = path3 + "__compacting"
-    spark.createDataFrame(rows, "id long, v string").write.parquet(path3)
-    spark.read.parquet(path3).repartition(1).write.parquet(tmp3)
-    spark.createDataFrame(extra, "id long, v string").write.mode(
-        "append"
-    ).parquet(path3)
-    tick = time.time() - 3600
-    os.utime(f"{tmp3}/_SUCCESS", (tick, tick))
-    os.utime(f"{path3}/_SUCCESS", (tick, tick))  # same tick, both sides
-    with _pytest.raises(RuntimeError, match="refusing to resume"):
-        compact_flat_relation(spark, path3)
-    assert sorted(map(tuple, spark.read.parquet(path3).collect())) == sorted(
-        want + [tuple(r) for r in extra]
-    )
-
-    # (g) same tick with EQUAL counts is the loss-free staged-from
-    # state: scratch dropped, target bytes untouched
-    path4 = str(tmp_path / "same_tick_clean")
-    tmp4 = path4 + "__compacting"
-    spark.createDataFrame(rows, "id long, v string").repartition(
-        4
-    ).write.parquet(path4)
-    spark.read.parquet(path4).repartition(1).write.parquet(tmp4)
-    os.utime(f"{tmp4}/_SUCCESS", (tick, tick))
-    os.utime(f"{path4}/_SUCCESS", (tick, tick))
-    n_files4 = len(glob.glob(os.path.join(path4, "*.parquet")))
-    compact_flat_relation(spark, path4)
-    assert not os.path.exists(tmp4)
-    assert len(glob.glob(os.path.join(path4, "*.parquet"))) == n_files4
-    assert sorted(map(tuple, spark.read.parquet(path4).collect())) == want
-
-
-def test_recover_flat_relation_crash_states(spark, tmp_path):
-    """Review r8: every crash state of the staged compaction must be
-    resolved by recovery at the serialization point — mid-overwrite
-    (partial target) restores from the committed scratch;
-    commit-then-crash followed by appends discards the stale scratch
-    instead of refusing forever; an uncommitted scratch is discarded
-    with the target untouched."""
-    import glob
-    import os
-
-    from twitch_stream_data_pipeline_spark.sinks import (
-        compact_flat_relation,
-        recover_flat_relation,
-    )
-
-    def rows_of(path):
-        return {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    # --- state A: committed scratch, target PARTIAL (mid-overwrite) --
-    tgt = str(tmp_path / "a")
-    spark.createDataFrame(
-        [(i, f"v{i}") for i in range(6)], "id long, v string"
-    ).repartition(3).write.parquet(tgt)
-    want = rows_of(tgt)
-    # stage a committed scratch exactly like the compactor does
-    scratch = tgt + "__compacting"
-    spark.read.parquet(tgt).repartition(1).write.parquet(scratch)
-    # simulate the overwrite-back dying partway: drop target _SUCCESS
-    # and one data file
-    os.remove(os.path.join(tgt, "_SUCCESS"))
-    os.remove(sorted(glob.glob(os.path.join(tgt, "*.parquet")))[0])
-    assert rows_of(tgt) != want  # target really is partial
-    assert recover_flat_relation(spark, tgt) == "restored"
-    assert rows_of(tgt) == want
-    assert not os.path.exists(scratch)
-    assert recover_flat_relation(spark, tgt) == "none"
-
-    # --- state B: committed scratch, then appends landed (the
-    # commit-then-crash-before-overwrite case the old guard refused) --
-    tgt = str(tmp_path / "b")
-    spark.createDataFrame([(1, "x")], "id long, v string").write.parquet(tgt)
-    spark.read.parquet(tgt).repartition(1).write.parquet(tgt + "__compacting")
-    import time
-
-    time.sleep(1.1)  # _SUCCESS mtimes are second-granularity on some fs
-    spark.createDataFrame([(2, "y")], "id long, v string").write.mode(
-        "append"
-    ).parquet(tgt)
-    assert recover_flat_relation(spark, tgt) == "discarded_stale"
-    assert rows_of(tgt) == {(1, "x"), (2, "y")}
-    assert not os.path.exists(tgt + "__compacting")
-    # and a fresh cadence compaction now runs clean where the manual
-    # guard used to raise forever
-    compact_flat_relation(spark, tgt)
-    assert rows_of(tgt) == {(1, "x"), (2, "y")}
-
-    # --- state C: uncommitted scratch, target intact ---
-    tgt = str(tmp_path / "c")
-    spark.createDataFrame([(5, "z")], "id long, v string").write.parquet(tgt)
-    os.makedirs(tgt + "__compacting")
-    assert recover_flat_relation(spark, tgt) == "discarded_uncommitted"
-    assert rows_of(tgt) == {(5, "z")}
-    assert not os.path.exists(tgt + "__compacting")
-
 
 def test_session_scratch_keeps_repo_root_clean(spark):
     """VERDICT r9 #9 (finishing r8 #8): the JVM's default drop zone for
@@ -1033,185 +811,3 @@ def test_session_scratch_keeps_repo_root_clean(spark):
     assert not str(derby_home).startswith(repo), derby_home
 
 
-def test_maintenance_lease_refuses_manual_compaction(spark, tmp_path):
-    """VERDICT r8 next-round #6: compact_flat_relation is manual-
-    callable against a path an active cadence owns, but its crash/
-    retry protocol is only sound inside the owner's serialization
-    point. With the lease held, a manual call refuses loudly; the
-    owner's own call (token presented) proceeds; release re-opens the
-    manual maintenance window."""
-    import os
-
-    import pytest as _pytest
-
-    from twitch_stream_data_pipeline_spark.sinks import (
-        acquire_maintenance_lease,
-        compact_flat_relation,
-        read_maintenance_lease,
-        release_maintenance_lease,
-    )
-
-    path = str(tmp_path / "leased")
-    spark.createDataFrame(
-        [(i, f"v{i}") for i in range(8)], "id long, v string"
-    ).repartition(4).write.parquet(path)
-
-    acquire_maintenance_lease(spark, path, "cadence-A")
-    assert read_maintenance_lease(spark, path) == "cadence-A"
-    # idempotent re-acquire (checkpoint restart), different owner refused
-    acquire_maintenance_lease(spark, path, "cadence-A")
-    with _pytest.raises(RuntimeError, match="already leased"):
-        acquire_maintenance_lease(spark, path, "cadence-B")
-
-    # manual compaction (no token) refused, data untouched
-    with _pytest.raises(RuntimeError, match="owned by an active"):
-        compact_flat_relation(spark, path)
-    assert spark.read.parquet(path).count() == 8
-
-    # the owner compacts fine
-    compact_flat_relation(spark, path, lease_token="cadence-A")
-    assert spark.read.parquet(path).count() == 8
-
-    # wrong-owner release refused; right-owner release opens the window
-    with _pytest.raises(RuntimeError, match="leased by"):
-        release_maintenance_lease(spark, path, "cadence-B")
-    release_maintenance_lease(spark, path, "cadence-A")
-    assert read_maintenance_lease(spark, path) is None
-    spark.createDataFrame([(99, "x")], "id long, v string").write.mode(
-        "append"
-    ).parquet(path)
-    compact_flat_relation(spark, path)
-    assert spark.read.parquet(path).count() == 9
-    # releasing an unleased path is a no-op
-    release_maintenance_lease(spark, path, "anyone")
-    assert not os.path.exists(path + "__lease")
-
-
-def test_maintenance_lease_acquire_is_atomic_under_race(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r9: acquisition was read-then-create-with-OVERWRITE — two
-    different owners racing could both pass the read and the second
-    create silently clobbered the first, so the lease didn't actually
-    serialize concurrent acquisition. Now the marker is created with
-    Hadoop's EXCLUSIVE create. Reproduce the race deterministically:
-    patch the pre-flight read to report 'unleased' (the stale view the
-    loser had before the winner's create landed) and assert the loser's
-    exclusive create fails over to re-read-and-refuse — or to silent
-    success when the racer was a retry of the SAME owner."""
-    import pytest as _pytest
-
-    import twitch_stream_data_pipeline_spark.sinks as sinks
-
-    path = str(tmp_path / "raced")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(
-        path
-    )
-
-    sinks.acquire_maintenance_lease(spark, path, "cadence-A")
-
-    real_read = sinks.read_maintenance_lease
-    stale_once = {"armed": True}
-
-    def stale_read(s, p):
-        if stale_once["armed"]:
-            stale_once["armed"] = False
-            return None  # the loser's pre-create view: nobody leased
-        return real_read(s, p)
-
-    # different-owner race: B read None before A's create landed; B's
-    # exclusive create must FAIL and the refusal must name A, and A's
-    # token must survive untouched (the old overwrite clobbered it)
-    monkeypatch.setattr(sinks, "read_maintenance_lease", stale_read)
-    with _pytest.raises(RuntimeError, match="already leased by 'cadence-A'"):
-        sinks.acquire_maintenance_lease(spark, path, "cadence-B")
-    assert real_read(spark, path) == "cadence-A"
-
-    # same-owner race (a checkpoint-restart retry racing itself): the
-    # losing create resolves to silent success, not an error
-    stale_once["armed"] = True
-    sinks.acquire_maintenance_lease(spark, path, "cadence-A")
-    assert real_read(spark, path) == "cadence-A"
-
-
-def test_maintenance_lease_local_disk_true_thread_race(spark, tmp_path):
-    """VERDICT r11 "what's wrong" #2 closed: on LOCAL disk the marker
-    is now created with the kernel's O_CREAT|O_EXCL (atomic per POSIX)
-    instead of Hadoop's RawLocalFileSystem exclusive create (which is
-    exists()-then-create and could double-admit). Pin it with a TRUE
-    concurrent race: N threads with DISTINCT owners all acquire the
-    same unleased path simultaneously — exactly one must win, every
-    loser must be refused with the winner's token named, and the
-    marker must hold the winner's token afterwards."""
-    import threading as _threading
-
-    import twitch_stream_data_pipeline_spark.sinks as sinks
-
-    path = str(tmp_path / "thread_raced")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(
-        path
-    )
-
-    n = 8
-    barrier = _threading.Barrier(n)
-    outcomes: list[tuple[str, str | None]] = [None] * n  # type: ignore[list-item]
-
-    def attempt(i: int) -> None:
-        owner = f"cadence-{i}"
-        barrier.wait()
-        try:
-            sinks.acquire_maintenance_lease(spark, path, owner)
-            outcomes[i] = ("won", owner)
-        except RuntimeError as e:
-            outcomes[i] = ("refused", str(e))
-
-    threads = [
-        _threading.Thread(target=attempt, args=(i,)) for i in range(n)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    winners = [o for s, o in outcomes if s == "won"]
-    assert len(winners) == 1, f"expected exactly one winner: {outcomes}"
-    held = sinks.read_maintenance_lease(spark, path)
-    assert held == winners[0]
-    for status, detail in outcomes:
-        if status == "refused":
-            # every loser saw the REAL winner, not a clobbered token
-            assert f"already leased by '{held}'" in detail
-
-
-def test_dim_upserter_cadence_takes_the_lease(spark, tmp_path):
-    """The upserter with compact_every leases its state path at
-    construction: manual compaction refuses while the cadence owns the
-    table, and a restart (same path) re-acquires without error."""
-    import pytest as _pytest
-
-    from twitch_stream_data_pipeline_spark.sinks import (
-        compact_flat_relation,
-        read_maintenance_lease,
-    )
-    from twitch_stream_data_pipeline_spark.streaming.dim_maintenance import (
-        DimUpserter,
-    )
-
-    state = str(tmp_path / "dim_state")
-    ddl = "user_id string, user_name string"
-    up = DimUpserter(
-        spark, state, ["user_id"], ddl, compact_every=2
-    )
-    assert read_maintenance_lease(spark, state) == f"DimUpserter:{state}"
-    up(spark.createDataFrame([("u1", "Ada")], ddl), 0)
-    with _pytest.raises(RuntimeError, match="owned by an active"):
-        compact_flat_relation(spark, state)
-    # checkpoint-restart analog: a new upserter on the same path
-    # re-acquires the same token idempotently
-    DimUpserter(spark, state, ["user_id"], ddl, compact_every=2)
-    # and the cadence itself still compacts on schedule (2nd append)
-    up(spark.createDataFrame([("u2", "Grace")], ddl), 1)
-    assert {r["user_id"] for r in spark.read.parquet(state).collect()} == {
-        "u1",
-        "u2",
-    }

@@ -79,18 +79,6 @@ def test_foreachbatch_dim_upsert(spark, tmp_path):
     ups(b2, 2)
     deltas = spark.read.parquet(str(tmp_path / "deltas")).count()
     assert deltas == 3
-
-    # the flat state relation gains files per micro-batch append;
-    # maintenance compaction between batches must not disturb the
-    # upsert semantics of the batches that follow
-    import glob
-
-    from twitch_stream_data_pipeline_spark.sinks import compact_flat_relation
-
-    state_dir = str(tmp_path / "dim")
-    assert len(glob.glob(f"{state_dir}/*.parquet")) >= 2
-    compact_flat_relation(spark, state_dir)
-    assert len(glob.glob(f"{state_dir}/*.parquet")) == 1
     b3 = spark.createDataFrame(
         [("3", "C3"), ("4", "d")], "user_id string, user_name string"
     )
@@ -570,6 +558,64 @@ def test_agg_maintainer_rejects_reset_checkpoint(spark, tmp_path):
         maintainer(b2, 0)
     # state untouched by the rejected write
     assert maintainer._latest_version() == 5
+
+
+@pytest.mark.parametrize("sink_cls", ["DimUpserter", "AggMaintainer"])
+def test_state_sink_redelivery_after_failed_write_converges(
+    spark, tmp_path, sink_cls
+):
+    """Fault injection on the snapshot-per-epoch layout: epoch 1's
+    write fails (a raising UDF on the value column — for the dim it
+    fails the delta write, for the aggregate the state write, leaving
+    an uncommitted ``version=1/``). Redelivering epoch 1 twice and
+    then running epoch 2 must give the no-crash state and delta
+    record, keep only the last two committed versions, and refuse an
+    epoch below the latest committed one."""
+    import os
+
+    from twitch_stream_data_pipeline_spark import streaming
+
+    ddl = "k string, v long"
+    epochs = [
+        [("a", 1), ("b", 2)],
+        [("b", 20), ("c", 3)],
+        [("c", 30), ("d", 4)],
+    ]
+    batches = [spark.createDataFrame(rows, ddl) for rows in epochs]
+
+    def make(name):
+        kw = {}
+        if sink_cls == "DimUpserter":
+            kw["delta_path"] = str(tmp_path / f"{name}_deltas")
+        cls = getattr(streaming, sink_cls)
+        return cls(spark, str(tmp_path / name), ["k"], ddl, **kw)
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()))
+
+    reference = make("ref")
+    for epoch, batch in enumerate(batches):
+        reference(batch, epoch)
+
+    sink = make("crash")
+    sink(batches[0], 0)
+    boom = F.udf(lambda v: 1 // 0, "long")
+    with pytest.raises(Exception):
+        sink(batches[1].withColumn("v", boom("v")), 1)
+    assert rows_of(sink.current_state()) == [("a", 1), ("b", 2)]
+    sink(batches[1], 1)
+    sink(batches[1], 1)
+    sink(batches[2], 2)
+
+    assert rows_of(sink.current_state()) == rows_of(reference.current_state())
+    assert sorted(os.listdir(sink.state_path)) == ["version=1", "version=2"]
+    if sink_cls == "DimUpserter":
+        assert rows_of(spark.read.parquet(sink.delta_dir)) == rows_of(
+            spark.read.parquet(reference.delta_dir)
+        )
+    with pytest.raises(RuntimeError, match="checkpoint was reset"):
+        sink(batches[0], 0)
+    assert sink._latest_version() == 2
 
 
 def test_streaming_warehouse_load_jdbc(spark, tmp_path):
@@ -1352,14 +1398,11 @@ def test_streaming_semantic_routing_with_persisted_kmeans(spark, tmp_path):
 
 
 def test_dim_upserter_compacts_on_cadence_mid_stream(spark, tmp_path):
-    """VERDICT r7 #7: the upserter's flat state table gains one file
-    per micro-batch append; compact_every=N runs compact_flat_relation
-    INSIDE the foreachBatch callback — the same serialization point as
-    the ingest appends, so the compactor's single-writer resume guard
-    holds by construction. Four micro-batches (maxFilesPerTrigger=1)
-    with a compaction after the third, then one more batch: the final
-    state must be row-identical to an uncompacted twin's, and the
-    delta record must be untouched by compaction."""
+    """The upserter rewrites the full state as one snapshot per epoch,
+    so the state's file count stays bounded with no compaction step:
+    four micro-batches (maxFilesPerTrigger=1) must give the expected
+    state, the delta record, and a latest version with fewer parquet
+    files than there were batches."""
     import glob
 
     src = tmp_path / "incoming"
@@ -1368,92 +1411,18 @@ def test_dim_upserter_compacts_on_cadence_mid_stream(spark, tmp_path):
         [("1", "a"), ("2", "b")],
         [("2", "B2"), ("3", "c")],   # "2" already known -> delta is ("3",)
         [("4", "d")],
-        [("4", "D4"), ("5", "e")],   # post-compaction batch
+        [("4", "D4"), ("5", "e")],
     ]
     for i, rows in enumerate(batches):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
             str(src / f"f{i}")
         )
-
-    def run(state_dir, delta_dir, ckpt, **kw):
-        ups = DimUpserter(
-            spark,
-            state_path=str(tmp_path / state_dir),
-            keys=["user_id"],
-            schema_ddl=schema,
-            delta_path=str(tmp_path / delta_dir),
-            **kw,
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        q = (
-            stream.writeStream.foreachBatch(ups)
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "upsert stream did not finish"
-        return ups
-
-    compacted = run("dim_c", "deltas_c", "ckpt_c", compact_every=3)
-    plain = run("dim_p", "deltas_p", "ckpt_p")
-
-    want = {("1", "a"), ("2", "b"), ("3", "c"), ("4", "d"), ("5", "e")}
-    got_c = {tuple(r) for r in compacted.current_state().collect()}
-    got_p = {tuple(r) for r in plain.current_state().collect()}
-    assert got_c == got_p == want
-    # the compaction actually fired after the third append: the three
-    # per-batch files collapsed to one, then batch 4 appended its own
-    state_files = glob.glob(str(tmp_path / "dim_c" / "*.parquet"))
-    plain_files = glob.glob(str(tmp_path / "dim_p" / "*.parquet"))
-    assert len(state_files) == 2, state_files
-    assert len(plain_files) == 4, plain_files
-    assert not glob.glob(str(tmp_path / "dim_c__compacting"))
-    # the durable delta record is not a compaction target
-    deltas = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "deltas_c"))
-        .select("user_id", "user_name")
-        .collect()
-    }
-    assert deltas == want
-
-
-def test_dim_upserter_cadence_survives_compaction_crash(spark, tmp_path):
-    """Review r8 end-to-end: a compaction that crashed between scratch
-    commit and overwrite-back must not brick the stream. The old guard
-    saw the committed scratch + later appends and raised at every Nth
-    append forever; with recover_flat_relation running at each batch
-    start, the stale scratch is discarded and the cadence proceeds."""
-    import glob
-    import os
-    import time
-
-    src = tmp_path / "incoming"
-    schema = "user_id string, user_name string"
-    for i, rows in enumerate([[("1", "a")], [("2", "b")], [("3", "c")]]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    state = str(tmp_path / "dim")
-    spark.createDataFrame([("0", "seed")], schema).write.parquet(state)
-    # simulate the crashed compaction: committed scratch staged from
-    # the pre-append state, overwrite-back never ran
-    spark.read.parquet(state).repartition(1).write.parquet(
-        state + "__compacting"
-    )
-    time.sleep(1.1)  # second-granularity _SUCCESS mtimes
-
     ups = DimUpserter(
         spark,
-        state_path=state,
+        state_path=str(tmp_path / "dim"),
         keys=["user_id"],
         schema_ddl=schema,
         delta_path=str(tmp_path / "deltas"),
-        compact_every=2,
     )
     stream = (
         spark.readStream.schema(schema)
@@ -1466,11 +1435,69 @@ def test_dim_upserter_cadence_survives_compaction_crash(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120), "stream bricked by crashed compaction"
+    assert q.awaitTermination(120), "upsert stream did not finish"
+
+    want = {("1", "a"), ("2", "b"), ("3", "c"), ("4", "d"), ("5", "e")}
+    assert {tuple(r) for r in ups.current_state().collect()} == want
+    latest = tmp_path / "dim" / f"version={ups._latest_version()}"
+    state_files = glob.glob(str(latest / "*.parquet"))
+    assert len(state_files) < len(batches), state_files
+    deltas = {
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "deltas"))
+        .select("user_id", "user_name")
+        .collect()
+    }
+    assert deltas == want
+
+
+def test_dim_upserter_cadence_survives_compaction_crash(spark, tmp_path):
+    """The crash case of the snapshot-per-epoch layout: a higher-
+    numbered ``version=`` directory without ``_SUCCESS`` (what a write
+    that died mid-flight leaves) holds junk rows. A restarted stream
+    must ignore it — an uncommitted version is never read — and must
+    not brick: the final state is the seeded state plus the three new
+    batches."""
+    import os
+
+    src = tmp_path / "incoming"
+    schema = "user_id string, user_name string"
+    state = str(tmp_path / "dim")
+    ups = DimUpserter(
+        spark,
+        state_path=state,
+        keys=["user_id"],
+        schema_ddl=schema,
+        delta_path=str(tmp_path / "deltas"),
+    )
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        q = (
+            stream.writeStream.foreachBatch(ups)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream bricked by a crashed write"
+
+    spark.createDataFrame([("0", "seed")], schema).coalesce(1).write.parquet(
+        str(src / "seed")
+    )
+    run()  # epoch 0 commits the seeded state
+    junk = os.path.join(state, "version=99")
+    spark.createDataFrame([("9", "junk")], schema).write.parquet(junk)
+    os.remove(os.path.join(junk, "_SUCCESS"))
+    for i, rows in enumerate([[("1", "a")], [("2", "b")], [("3", "c")]]):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(src / f"f{i}")
+        )
+    assert {tuple(r) for r in ups.current_state().collect()} == {("0", "seed")}
+    run()
     got = {tuple(r) for r in ups.current_state().collect()}
     assert got == {("0", "seed"), ("1", "a"), ("2", "b"), ("3", "c")}
-    assert not glob.glob(state + "__compacting")
-    # the cadence actually compacted: 1 seed + 3 appends with
-    # compact_every=2 -> compaction after append 2 (files: 1), then
-    # one more append (files: 2)
-    assert len(glob.glob(os.path.join(state, "*.parquet"))) == 2
+    assert ups._latest_version() == 3

@@ -43,7 +43,6 @@ from .dedup_text import (
     minhash_signatures,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
-    shingles,
     simhash64,
     simhash_near_dup_pairs,
 )
@@ -145,7 +144,6 @@ __all__ = [
     "quantized_embedding",
     "repetition_stats",
     "semantic_dedup",
-    "shingles",
     "simhash64",
     "simhash_near_dup_pairs",
     "split_assign",

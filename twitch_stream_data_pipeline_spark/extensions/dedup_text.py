@@ -52,23 +52,6 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a document as array<string>.
-
-    Documents shorter than ``n`` tokens yield an empty shingle set.
-    """
-    toks = tokenize(F.lower(text))
-    cnt = F.size(toks) - (n - 1)
-    idx = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)]),
-    )
-    return F.array_distinct(grams)
-
-
 def exact_dedup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup: one row per distinct (normalized) text.
 

@@ -7,7 +7,7 @@ lookups, window-ranked keep-first dedup, anti-join deltas, arithmetic
 nearest-slot rounding instead of the reference's linear scans.
 """
 
-from .cleaning import empty_to_sentinel, sentinel_to_null, valid_integer_ids
+from .cleaning import empty_to_sentinel, valid_integer_ids
 from .dedup import dedup_keep_first
 from .joins import nearest_slot_id, positional_join
 from .aggregates import (
@@ -41,7 +41,6 @@ __all__ = [
     "skew_report",
     "ts_pattern_search",
     "empty_to_sentinel",
-    "sentinel_to_null",
     "valid_integer_ids",
     "dedup_keep_first",
     "nearest_slot_id",

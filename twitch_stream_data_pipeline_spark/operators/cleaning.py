@@ -36,16 +36,6 @@ def empty_to_sentinel(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     )
 
 
-def sentinel_to_null(df: DataFrame, columns: dict[str, str]) -> DataFrame:
-    """Inverse edge policy: sentinel strings back to real NULLs."""
-    return df.withColumns(
-        {
-            c: F.when(F.col(c) == sentinel, F.lit(None)).otherwise(F.col(c))
-            for c, sentinel in columns.items()
-        }
-    )
-
-
 def is_integer_string(c: Column) -> Column:
     """True when the string parses as an integer.
 

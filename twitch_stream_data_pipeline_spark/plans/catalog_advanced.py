@@ -1479,7 +1479,7 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Null-safe equality join (Spark's <=> / eqNullSafe, SQL's IS NOT "
     "DISTINCT FROM): the NULL group — here the sentinel-nulled 'N' "
     "flag, the engine's representation of 'unknown' keys after "
-    "sentinel_to_null cleaning (P8) — joins to itself instead of "
+    "sentinel-to-NULL cleaning (P8) — joins to itself instead of "
     "silently dropping, the semantics a dim lookup on a nullable key "
     "actually needs. Plans as an ordinary hash join (null-safe "
     "equality is still an equi-key); without it the NULL rows vanish "

@@ -11,7 +11,6 @@ the Postgres warehouse load (K3).
 
 from __future__ import annotations
 
-import os
 import threading
 from collections.abc import Sequence
 
@@ -484,341 +483,3 @@ def compact_partitions(
         max_records_per_file=max_records_per_file,
         partition_overwrite_mode="dynamic",
     )
-
-
-def _maintenance_lease_path(path: str) -> str:
-    return path.rstrip("/") + "__lease"
-
-
-def acquire_maintenance_lease(
-    spark: SparkSession, path: str, owner: str
-) -> None:
-    """Mark ``path`` as owned by an active maintenance cadence
-    (VERDICT r8 next-round #6). The cadence's serialization point is
-    what makes :func:`compact_flat_relation`'s resume protocol sound;
-    a MANUAL compaction issued while a stream owns the path runs
-    outside that point and can interleave with appends. The lease is a
-    marker file ``{path}__lease`` holding the owner token: acquiring
-    with the SAME owner is idempotent (checkpoint restarts re-acquire
-    without ceremony); a different owner raises. The lease is
-    deliberately NOT auto-released — streams have no reliable shutdown
-    hook — so decommissioning a cadence means calling
-    :func:`release_maintenance_lease` (or deleting the marker file,
-    which every refusal message names). Acquisition is RACE-SAFE
-    (ADVICE r9; local-disk gap closed in round 12 — VERDICT r11
-    "what's wrong" #2): on HDFS and object stores the marker is
-    written with Hadoop's exclusive create (``overwrite=false``,
-    atomic there); on the LOCAL filesystem — where Hadoop's exclusive
-    create is itself check-then-act — the marker is created with the
-    kernel's ``O_CREAT|O_EXCL``, which POSIX guarantees atomic. Either
-    way two concurrent acquirers resolve to exactly one winner; the
-    loser re-reads (waiting out an in-flight token write) and either
-    tolerates its own token (a racing retry of the same cadence) or
-    raises; a create failure with NO marker present propagates as
-    itself, never as a bogus lease conflict."""
-    lease = _maintenance_lease_path(path)
-
-    def refuse(holder):
-        raise RuntimeError(
-            f"acquire_maintenance_lease: {path} is already leased by "
-            f"{holder!r}; release it (release_maintenance_lease or "
-            f"delete {lease}) before attaching a new cadence."
-        )
-
-    def resolve_lost_race():
-        # someone created the marker since our pre-flight read:
-        # re-read and compare, so exactly one acquirer proceeds
-        raced = read_maintenance_lease(spark, path)
-        if raced == "":
-            # the winner created the marker but its token write is
-            # still in flight — bounded wait for the content
-            import time as _time
-
-            for _ in range(20):
-                _time.sleep(0.05)
-                raced = read_maintenance_lease(spark, path)
-                if raced:
-                    break
-        if raced == owner:
-            return  # lost the race to our own retry — still leased
-        refuse(raced)
-
-    current = read_maintenance_lease(spark, path)
-    if current is not None:
-        if current != owner:
-            refuse(current)
-        return  # idempotent re-acquire: the marker already says us
-    # ADVICE r9: read-then-create-with-overwrite let two DIFFERENT
-    # owners both pass the read and the second silently clobber the
-    # first. Create EXCLUSIVELY instead, picking the primitive that is
-    # actually atomic on the marker's filesystem.
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jlease = hpath(lease)
-    fs = jlease.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() == "file":
-        # LOCAL disk: Hadoop's create(overwrite=false) is exists()-
-        # then-create and can double-admit under a true concurrent
-        # race. The kernel's O_EXCL is the atomic primitive here.
-        local = jlease.toUri().getPath()
-        parent = os.path.dirname(local)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        try:
-            fd = os.open(
-                local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644
-            )
-        except FileExistsError:
-            if read_maintenance_lease(spark, path) is None:
-                # the racing holder RELEASED between our open and this
-                # read — the path is unleased again; take it fresh
-                acquire_maintenance_lease(spark, path, owner)
-                return
-            resolve_lost_race()
-            return
-        try:
-            os.write(fd, owner.encode("utf-8"))
-        finally:
-            os.close(fd)
-        return
-    try:
-        out = fs.create(jlease, False)
-    except Exception:
-        if read_maintenance_lease(spark, path) is None:
-            # no marker exists: the create failed for a NON-race
-            # reason (permissions, transient IO) — the real cause
-            # must propagate, not a bogus "leased by None" diagnosis
-            raise
-        resolve_lost_race()
-        return
-    try:
-        out.write(bytearray(owner.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def read_maintenance_lease(spark: SparkSession, path: str) -> str | None:
-    """The current lease owner for ``path``, or None when unleased."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jlease = hpath(_maintenance_lease_path(path))
-    fs = jlease.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jlease):
-        return None
-    stream = fs.open(jlease)
-    try:
-        return str(
-            spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        )
-    finally:
-        stream.close()
-
-
-def release_maintenance_lease(
-    spark: SparkSession, path: str, owner: str
-) -> None:
-    """Release a lease taken with :func:`acquire_maintenance_lease`.
-    Refuses when a DIFFERENT owner holds it (releasing someone else's
-    lease re-opens exactly the race the lease exists to close); a
-    missing lease is a no-op."""
-    current = read_maintenance_lease(spark, path)
-    if current is None:
-        return
-    if current != owner:
-        raise RuntimeError(
-            f"release_maintenance_lease: {path} is leased by "
-            f"{current!r}, not {owner!r}."
-        )
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jlease = hpath(_maintenance_lease_path(path))
-    fs = jlease.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jlease, False)
-
-
-def compact_flat_relation(
-    spark: SparkSession,
-    path: str,
-    target_files: int = 1,
-    lease_token: str | None = None,
-) -> None:
-    """Small-file compaction for an UNPARTITIONED parquet relation —
-    the flat twin of :func:`compact_partitions`, needed by the append-
-    only flat relations: the index layouts' ``_ids`` (scanned by the
-    replay gate per ingest) and the dim upserter's state table each
-    gain one file per micro-batch append (96/day at the reference
-    cadence), so file-open overhead accumulates without a partition
-    column to key a rewrite on.
-
-    Materialize-then-overwrite through a scratch sibling (the dim
-    upserter's pattern): Spark refuses to overwrite a path its plan is
-    reading, and staging through the scratch dir makes the rewrite two
-    committed jobs — while the target is being overwritten, the
-    committed scratch copy is the recovery point. Crash/retry
-    protocol: a re-run first inspects the scratch sibling. A COMMITTED
-    scratch (``_SUCCESS`` present) means the previous run crashed
-    during or after the overwrite-back, when the target may be partial
-    — the retry must RESUME from the scratch copy, never re-read the
-    target (re-staging a truncated target would overwrite the only
-    complete copy). An uncommitted scratch means the crash happened
-    mid-stage while the target was still intact: discard it and start
-    over. ``target_files`` sizes the output on BOTH writes (one file
-    for anything modest; shard a multi-GB ids relation — without the
-    second repartition the overwrite-back would inherit the file
-    scan's split packing, not the requested shard count).
-    Single-writer maintenance-window semantics, like every
-    non-transactional parquet rewrite in this layer — and GUARDED
-    (ADVICE r7), because for the ``_ids`` relation the "other writer"
-    is the ingest cadence itself: a committed scratch is the recovery
-    source only while the target has not advanced past it. On retry
-    with a committed scratch, the target's own ``_SUCCESS`` decides:
-    absent (crash mid-overwrite-back; no append can have committed to
-    a _SUCCESS-less dir) or older than the scratch commit (crash
-    before the overwrite-back started; target still the exact state
-    the scratch was staged from) -> resume is provably safe. NEWER —
-    or EQUAL (ADVICE r8: ``_SUCCESS`` mtimes are second-granularity on
-    common filesystems, so an append landing in the same tick as the
-    scratch commit is indistinguishable from one landing just after;
-    treating equal as "older" would resume over it and silently drop
-    the append, exactly the loss this guard exists to refuse) — means
-    writes MAY have landed after the scratch committed, and the row
-    counts decide: equal counts identify the two loss-free states
-    (the normal crash-after-overwrite-before-cleanup, and a
-    same-tick staging with no interleaved append — either way drop
-    the scratch and return, leaving an intact target the caller can
-    simply re-compact); unequal counts mean appends interleaved with
-    the crashed compaction — resuming would silently DROP them, so
-    refuse loudly and leave both copies for the operator.
-
-    Ownership (VERDICT r8 next-round #6): when an active cadence holds
-    the maintenance lease on ``path``
-    (:func:`acquire_maintenance_lease` — the dim upserter takes one
-    whenever ``compact_every`` is set), a call that does not present
-    the owner's token as ``lease_token`` is REFUSED outright: a manual
-    compaction against a stream-owned path runs outside the cadence's
-    serialization point, and the crash/retry protocol above is only
-    sound inside it."""
-    owner = read_maintenance_lease(spark, path)
-    if owner is not None and lease_token != owner:
-        raise RuntimeError(
-            f"compact_flat_relation: {path} is owned by an active "
-            f"maintenance cadence ({owner!r} holds "
-            f"{_maintenance_lease_path(path)}). A manual compaction "
-            "would run outside the owner's serialization point and can "
-            "interleave with its appends. If the cadence is truly "
-            "gone, release the lease first "
-            "(release_maintenance_lease, or delete the lease file)."
-        )
-    tmp = path.rstrip("/") + "__compacting"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jtmp = hpath(tmp)
-    fs = jtmp.getFileSystem(spark._jsc.hadoopConfiguration())
-    success = hpath(tmp + "/_SUCCESS")
-    # Cadence callers (DimUpserter.compact_every) run
-    # recover_flat_relation at every batch start, so by the time this
-    # runs their scratch states are already resolved; the inspection
-    # below is the MANUAL-maintenance protocol, where interleaved
-    # writers are a real possibility and loud refusal is correct.
-    if not fs.exists(success):
-        if fs.exists(jtmp):  # uncommitted leftover; target still intact
-            fs.delete(jtmp, True)
-        spark.read.parquet(path).repartition(target_files).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-    else:
-        tgt_success = hpath(path.rstrip("/") + "/_SUCCESS")
-        if fs.exists(tgt_success) and (
-            fs.getFileStatus(tgt_success).getModificationTime()
-            >= fs.getFileStatus(success).getModificationTime()
-        ):
-            t_count = spark.read.parquet(path).count()
-            s_count = spark.read.parquet(tmp).count()
-            if t_count == s_count:
-                # overwrite-back completed; only the cleanup crashed
-                fs.delete(jtmp, True)
-                return
-            raise RuntimeError(
-                f"compact_flat_relation: refusing to resume — the target "
-                f"{path} ({t_count} rows) advanced past the committed "
-                f"scratch {tmp} ({s_count} rows): writes interleaved "
-                f"with a crashed compaction, and overwriting from the "
-                f"scratch would silently drop them. Reconcile manually "
-                f"(if the target is known complete, delete the scratch "
-                f"dir)."
-            )
-    spark.read.parquet(tmp).repartition(target_files).write.mode(
-        "overwrite"
-    ).parquet(path)
-    fs.delete(jtmp, True)
-
-
-
-def recover_flat_relation(spark: SparkSession, path: str) -> str:
-    """Crash recovery for a flat relation maintained by
-    :func:`compact_flat_relation` under SERIALIZED-writer discipline —
-    run this at the START of every processing turn (the dim upserter's
-    foreachBatch entry does, when ``compact_every`` is set), BEFORE
-    reading or appending state. Returns the action taken (``"none"``,
-    ``"discarded_uncommitted"``, ``"restored"``, ``"discarded_stale"``).
-
-    Why a separate entry point (review r8): a compaction that crashes
-    BETWEEN the scratch commit and the overwrite-back leaves a
-    committed scratch and a fully intact target; the stream then
-    restarts and legitimately appends. compact_flat_relation's
-    manual-maintenance guard reads that state as "writes interleaved
-    with a crashed compaction" and refuses — correct for an unknown
-    concurrent writer, but on the cadence it turned one transient
-    crash into a PERMANENTLY failing stream (the refuse re-raised at
-    every Nth append). Worse, a crash DURING the overwrite-back leaves
-    a partial target that the next restart's append would read and
-    extend before compaction ever re-ran. Recovery at the
-    serialization point closes both:
-
-    * scratch absent -> nothing to do.
-    * scratch uncommitted (no ``_SUCCESS``) -> the crash was mid-stage
-      and the target was never touched: discard the scratch.
-    * scratch committed and the target missing its ``_SUCCESS`` (or
-      missing entirely, or its ``_SUCCESS`` not newer than the
-      scratch's) -> the crash hit during (or just before) the
-      overwrite-back and the target may be partial: restore the target
-      from the scratch copy. Because this runs before every state
-      read, no append can ever have extended a partial target —
-      restoring cannot drop anything.
-    * scratch committed and the target's ``_SUCCESS`` strictly newer ->
-      the target advanced past the scratch. Under this protocol the
-      only writers that can have produced that ``_SUCCESS`` are a
-      COMPLETED overwrite-back (cleanup crashed) or appends to a
-      complete target (commit-then-crash-before-overwrite, then normal
-      batches) — a partial target can never receive an append, because
-      the restore branch above runs first on every turn. Either way
-      the scratch is stale: discard it. This is the branch the manual
-      protocol must refuse (it cannot assume serialized writers) and
-      the cadence must not.
-    """
-    tmp = path.rstrip("/") + "__compacting"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jtmp = hpath(tmp)
-    fs = jtmp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jtmp):
-        return "none"
-    scratch_success = hpath(tmp + "/_SUCCESS")
-    if not fs.exists(scratch_success):
-        fs.delete(jtmp, True)
-        return "discarded_uncommitted"
-    tgt_success = hpath(path.rstrip("/") + "/_SUCCESS")
-    if fs.exists(tgt_success) and (
-        fs.getFileStatus(tgt_success).getModificationTime()
-        > fs.getFileStatus(scratch_success).getModificationTime()
-    ):
-        fs.delete(jtmp, True)
-        return "discarded_stale"
-    # count the scratch files to preserve the original shard count
-    n_files = sum(
-        1
-        for st in fs.listStatus(jtmp)
-        if st.getPath().getName().endswith(".parquet")
-    ) or 1
-    spark.read.parquet(tmp).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(path)
-    fs.delete(jtmp, True)
-    return "restored"

@@ -1,31 +1,126 @@
-"""Streaming dimension maintenance via foreachBatch (SURVEY.md §2.7
+"""Streaming state maintenance via foreachBatch (SURVEY.md §2.7
 "stateful dim maintenance", §3.2/3.3 restatement).
 
-The reference's per-batch read-modify-write of ``current_users`` /
-``current_categories`` CSVs (union + key-dedup + delta + overwrite,
-``src/curate_data/curate_users_data.py:54-108``) becomes a
-``foreachBatch`` upsert into a parquet-backed dimension table: each
-micro-batch left-anti-joins the dim, appends only new keys, and emits
-the delta downstream — exactly-once per sink via checkpointing instead
-of the reference's manual SQS ack discipline.
+The reference keeps ``current_users`` / ``current_categories`` by
+rewriting the whole state CSV on every batch (union + key-dedup +
+delta + overwrite, ``src/curate_data/curate_users_data.py:54-108``,
+K5). Both sinks here keep that shape: each micro-batch that changes
+the state writes the full new state as a snapshot
+``state_path/version=<epoch_id>``, exactly-once per sink via
+checkpointing instead of the reference's manual SQS ack discipline.
 
-At warehouse scale the overwrite step would be a MERGE into a
-Delta/Iceberg table; with plain parquet we append new-key rows only,
-which is equivalent because existing keys are never modified
-(state-attrs-win semantics).
+One commit rule serves both (log-as-commit-point, as in Delta Lake):
+a version is committed once its ``_SUCCESS`` marker exists. Readers
+and the next batch use the highest committed version, so a failed or
+in-flight write — an empty or partial ``version=`` directory — is
+never read, and redelivering the epoch rewrites it. After a commit
+only that version and the one before it are kept: one full rewrite
+per batch bounds the file count, so no compaction, lease or recovery
+pass is needed. At warehouse scale the same contract is a MERGE into
+Delta/Iceberg.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.upsert import upsert_state
 
 
-class DimUpserter:
-    """foreachBatch sink maintaining an insert-only dimension table."""
+class _VersionedState:
+    """The snapshot-per-epoch layout both state sinks share; a subclass
+    supplies only :meth:`_merge`."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        state_path: str,
+        keys: list[str],
+        schema_ddl: str,
+    ) -> None:
+        self.spark = spark
+        self.state_path = state_path
+        self.keys = keys
+        self.schema_ddl = schema_ddl
+
+    def _version_dir(self, version: int) -> str:
+        return os.path.join(self.state_path, f"version={version}")
+
+    def _version_dirs(self) -> dict[int, str]:
+        if not os.path.isdir(self.state_path):
+            return {}
+        return {
+            int(d.split("=", 1)[1]): os.path.join(self.state_path, d)
+            for d in os.listdir(self.state_path)
+            if d.startswith("version=")
+        }
+
+    def _committed_versions(self) -> list[int]:
+        return sorted(
+            v
+            for v, d in self._version_dirs().items()
+            if os.path.exists(os.path.join(d, "_SUCCESS"))
+        )
+
+    def _latest_version(self) -> int | None:
+        versions = self._committed_versions()
+        return versions[-1] if versions else None
+
+    def current_state(self) -> DataFrame:
+        v = self._latest_version()
+        if v is None:
+            return self.spark.createDataFrame([], self.schema_ddl)
+        return self.spark.read.schema(self.schema_ddl).parquet(self._version_dir(v))
+
+    def _merge(
+        self, batch: DataFrame, state: DataFrame, epoch_id: int
+    ) -> DataFrame | None:
+        """The new full state, or None when the batch changes nothing."""
+        raise NotImplementedError
+
+    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+        latest = self._latest_version()
+        if latest is not None and epoch_id < latest:
+            # A fresh checkpoint resets epoch ids to 0; writing a version
+            # below the latest would make current_state() serve the OLD
+            # version forever (and merge onto it). State and checkpoint
+            # share one lifecycle — they must be cleared together.
+            raise RuntimeError(
+                f"{type(self).__name__} state at {self.state_path} is at "
+                f"version={latest} but the stream delivered "
+                f"epoch_id={epoch_id}: the checkpoint was reset without "
+                "clearing state_path (or two queries share one state "
+                "dir). Clear both together, or point the restarted "
+                "query at a fresh state_path."
+            )
+        if epoch_id == latest:
+            return  # redelivery of an epoch whose version is committed
+        new_state = self._merge(batch, self.current_state(), epoch_id)
+        if new_state is None:
+            return
+        out = self._version_dir(epoch_id)
+        # rebalance: AQE sizes the snapshot's files to the state, so the
+        # file count stays bounded however many batches have run
+        new_state.hint("rebalance").write.mode("overwrite").parquet(out)
+        if not os.path.exists(os.path.join(out, "_SUCCESS")):
+            raise RuntimeError(
+                f"{out} was written without a _SUCCESS marker, so it can "
+                "never commit: keep mapreduce.fileoutputcommitter."
+                "marksuccessfuljobs at its default (true)."
+            )
+        keep = self._committed_versions()[-2:]
+        for v, d in self._version_dirs().items():
+            if v not in keep:
+                shutil.rmtree(d, ignore_errors=True)
+
+
+class DimUpserter(_VersionedState):
+    """foreachBatch sink maintaining an insert-only dimension table:
+    keys already in state keep their attributes (state-attrs-win), and
+    only unseen keys are added and emitted downstream."""
 
     def __init__(
         self,
@@ -34,104 +129,34 @@ class DimUpserter:
         keys: list[str],
         schema_ddl: str,
         delta_path: str | None = None,
-        compact_every: int | None = None,
-        compact_target_files: int = 1,
     ) -> None:
-        self.spark = spark
-        self.state_path = state_path
-        self.keys = keys
-        self.schema_ddl = schema_ddl
+        super().__init__(spark, state_path, keys, schema_ddl)
         self.delta_dir = delta_path or state_path.rstrip("/") + "_deltas"
-        #: every N state APPENDS (epochs with a non-empty delta), run
-        #: :func:`~..sinks.compact_flat_relation` on the state table —
-        #: it gains one file per append (96/day at the reference
-        #: cadence). Running the compaction INSIDE the foreachBatch
-        #: callback puts it behind the same serialization point as the
-        #: ingest appends (foreachBatch invocations of one query never
-        #: overlap), which is exactly the single-writer window the
-        #: compactor's resume guard assumes (review r7): no append can
-        #: interleave with a compaction scheduled this way. None (the
-        #: default) preserves the call-it-yourself maintenance window.
-        #: The counter is in-memory: a checkpoint restart resets the
-        #: cadence PHASE (the first post-restart compaction may come up
-        #: to N-1 appends late) — never the correctness of state reads:
-        #: every batch first runs
-        #: :func:`~..sinks.recover_flat_relation`, which restores a
-        #: target left partial by a mid-overwrite crash and discards a
-        #: scratch left stale by a commit-then-crash, before anything
-        #: reads or appends state (review r8).
-        self.compact_every = compact_every
-        self.compact_target_files = compact_target_files
-        self._appends_since_compact = 0
-        #: the maintenance-lease token (VERDICT r8 #6): when this
-        #: upserter owns the compaction cadence, it leases the state
-        #: path so a MANUAL compact_flat_relation call — which would
-        #: run outside the foreachBatch serialization point and can
-        #: interleave with the appends — is refused loudly instead of
-        #: silently racing. The token is stable per state path, so a
-        #: checkpoint restart re-acquires idempotently. The lease is
-        #: not auto-released (streams have no reliable shutdown hook);
-        #: decommissioning = sinks.release_maintenance_lease.
-        self._lease = f"DimUpserter:{state_path.rstrip('/')}"
-        if compact_every:
-            from ..sinks import acquire_maintenance_lease
 
-            acquire_maintenance_lease(spark, state_path, self._lease)
+    def _merge(
+        self, batch: DataFrame, state: DataFrame, epoch_id: int
+    ) -> DataFrame | None:
+        """Record the delta, then return state ∪ the delta as read back.
 
-    def current_state(self) -> DataFrame:
-        if os.path.exists(self.state_path):
-            return self.spark.read.schema(self.schema_ddl).parquet(self.state_path)
-        return self.spark.createDataFrame([], self.schema_ddl)
-
-    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        """Process one micro-batch: record the delta, append unseen keys.
-
-        The delta is materialized to the delta sink *first* and the
-        state append reads it back from there: the delta's plan reads
-        ``state_path``, and appending to a path invalidates any cached
-        plan over it — writing the un-materialized delta after touching
-        the state would silently re-evaluate it against the new state
-        (to an empty set). Materialize-then-append also makes the delta
-        sink the durable record a downstream warehouse load consumes
-        (the reference's curated-layer CSV, K3).
+        The delta is materialized to ``delta_path/epoch=<id>`` first:
+        that record is what a downstream warehouse load consumes (the
+        reference's curated-layer CSV, K3), and building the new state
+        from the read-back copy keeps state and record identical even
+        where ``dropDuplicates`` could pick a different row on a second
+        evaluation. An empty delta writes nothing (reference parity:
+        ``curate_categories_data.py:82-87`` early exit).
         """
-        if self.compact_every:
-            # crash recovery BEFORE any state read (review r8): a
-            # compaction that died mid-overwrite leaves a partial state
-            # table that this batch would otherwise read and extend;
-            # one that died between scratch commit and overwrite-back
-            # leaves a committed scratch that the compactor's manual
-            # guard would refuse forever once appends resume. Running
-            # recovery at the same serialization point as the appends
-            # resolves both states provably (see recover_flat_relation).
-            from ..sinks import recover_flat_relation
-
-            recover_flat_relation(self.spark, self.state_path)
-        state = self.current_state()
-        result = upsert_state(batch, state, self.keys)
-        if result.delta.isEmpty():
-            # reference parity: empty delta -> no writes at all
-            # (curate_categories_data.py:82-87 early exit)
-            return
+        delta = upsert_state(batch, state, self.keys).delta
+        if delta.isEmpty():
+            return None
         epoch_dir = os.path.join(self.delta_dir, f"epoch={epoch_id}")
-        result.delta.write.mode("overwrite").parquet(epoch_dir)
-        materialized = self.spark.read.schema(self.schema_ddl).parquet(epoch_dir)
-        materialized.write.mode("append").parquet(self.state_path)
-        if self.compact_every:
-            self._appends_since_compact += 1
-            if self._appends_since_compact >= self.compact_every:
-                from ..sinks import compact_flat_relation
-
-                compact_flat_relation(
-                    self.spark,
-                    self.state_path,
-                    target_files=self.compact_target_files,
-                    lease_token=self._lease,
-                )
-                self._appends_since_compact = 0
+        delta.write.mode("overwrite").parquet(epoch_dir)
+        return state.unionByName(
+            self.spark.read.schema(self.schema_ddl).parquet(epoch_dir)
+        )
 
 
-class AggMaintainer:
+class AggMaintainer(_VersionedState):
     """foreachBatch sink maintaining a keyed AGGREGATE table with
     replace-on-key semantics — the incremental-materialized-view twin
     of :class:`DimUpserter` (whose dims are insert-only; aggregates
@@ -139,72 +164,17 @@ class AggMaintainer:
     revises it).
 
     Consumed with an update-mode streaming aggregation: each trigger
-    emits only revised (key, aggregate) rows; the sink left-anti-joins
-    them out of the current state and writes the union as a NEW
-    ``version=<epoch>`` directory. Readers always see one complete,
-    consistent version (the highest) — no reader ever observes a
-    half-rewritten table, and the previous version doubles as a
-    poor-man's snapshot history. At warehouse scale the same contract
-    is a MERGE into Delta/Iceberg; the versioned-directory form is the
-    plain-parquet equivalent, rewritten per batch because an aggregate
-    table is keys x windows — bounded — never fact-sized.
+    emits only revised (key, aggregate) rows; the merge left-anti-joins
+    them out of the current state and unions them in. An aggregate
+    table is keys x windows — bounded — never fact-sized, so the full
+    rewrite per batch stays cheap.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_path: str,
-        keys: list[str],
-        schema_ddl: str,
-    ) -> None:
-        self.spark = spark
-        self.state_path = state_path
-        self.keys = keys
-        self.schema_ddl = schema_ddl
-
-    def _latest_version(self) -> int | None:
-        if not os.path.exists(self.state_path):
-            return None
-        versions = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.state_path)
-            if d.startswith("version=")
-        ]
-        return max(versions) if versions else None
-
-    def current_state(self) -> DataFrame:
-        v = self._latest_version()
-        if v is None:
-            return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.schema(self.schema_ddl).parquet(
-            os.path.join(self.state_path, f"version={v}")
-        )
-
-    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+    def _merge(
+        self, batch: DataFrame, state: DataFrame, epoch_id: int
+    ) -> DataFrame | None:
         if batch.isEmpty():
-            return
-        latest = self._latest_version()
-        # strict <: a failure retry legitimately re-delivers the SAME
-        # epoch_id (at-least-once foreachBatch) and the left-anti merge
-        # makes that idempotent; only a strictly lower epoch proves a
-        # reset checkpoint against surviving state.
-        if latest is not None and epoch_id < latest:
-            # A fresh checkpoint resets epoch ids to 0; writing
-            # version=0 below an existing latest would make
-            # current_state() silently serve the OLD version forever
-            # (and merge onto it). State and checkpoint share one
-            # lifecycle — they must be cleared together.
-            raise RuntimeError(
-                f"AggMaintainer state at {self.state_path} is at "
-                f"version={latest} but the stream delivered "
-                f"epoch_id={epoch_id}: the checkpoint was reset without "
-                "clearing state_path (or two queries share one state "
-                "dir). Clear both together, or point the restarted "
-                "query at a fresh state_path."
-            )
-        state = self.current_state()
-        merged = state.join(
+            return None
+        return state.join(
             batch.select(*self.keys).distinct(), self.keys, "left_anti"
-        ).unionByName(batch.select(*state.columns) if state.columns else batch)
-        out = os.path.join(self.state_path, f"version={epoch_id}")
-        merged.write.mode("overwrite").parquet(out)
+        ).unionByName(batch.select(*state.columns))
