@@ -227,6 +227,24 @@ def tail_sampled_out() -> frozenset[str]:
     return frozenset(out)
 
 
+def fail_partitioned_writes(monkeypatch, leg: str) -> None:
+    """Make ``sinks.write_partitioned`` raise, for the fault-injection
+    tests of the index layouts: ``"before"`` fails before the write
+    starts, ``"after"`` lets the write commit and then raises — the
+    two crash points of a one-write index mutation. ``monkeypatch.undo()``
+    restores the real writer."""
+    from twitch_stream_data_pipeline_spark import sinks
+
+    real = sinks.write_partitioned
+
+    def failing(*args, **kwargs):
+        if leg == "after":
+            real(*args, **kwargs)
+        raise RuntimeError(f"injected write failure ({leg})")
+
+    monkeypatch.setattr(sinks, "write_partitioned", failing)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)

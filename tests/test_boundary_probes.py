@@ -359,10 +359,12 @@ def test_embedding_dim_contract_fails_loudly_on_ragged_corpus(
 def test_read_postings_empty_build_vs_stripped_layout(spark, tmp_path):
     """The zero-postings fallback is gated on provable emptiness: an
     index built over a zero-shingle corpus (all docs shorter than the
-    shingle width) has _ids and reads as an empty relation; a layout
-    whose band directories were STRIPPED out from under a surviving
-    _params (no _ids — the pre-_ids legacy shape) refuses loudly
-    instead of silently re-emitting every redelivered document."""
+    shingle width) holds only id records and no band postings, and an
+    index built over an empty corpus commits a root with no part files
+    that reads as an empty relation; a layout whose band directories
+    were STRIPPED out from under a surviving _params (no part files
+    and no _SUCCESS) refuses loudly instead of silently re-emitting
+    every redelivered document."""
     import shutil
 
     from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
@@ -374,17 +376,25 @@ def test_read_postings_empty_build_vs_stripped_layout(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, "ab") for i in range(4)], "doc_id bigint, text string"
     )
-    built = str(tmp_path / "empty_idx")
+    built = str(tmp_path / "short_idx")
     build_lsh_index(docs, built)  # every doc < n words -> zero postings
-    assert _read_postings(spark, built).count() == 0
-    # and the probe path over the empty index returns no candidates
+    layout = _read_postings(spark, built)
+    assert layout.filter("band >= 0").count() == 0
+    assert sorted(
+        r["doc_id"] for r in layout.filter("band = -1").collect()
+    ) == [0, 1, 2, 3]
+    # and the probe path over the posting-less index returns no candidates
     assert lsh_index_probe(spark, built, docs.limit(2)).count() == 0
+
+    empty = str(tmp_path / "empty_idx")
+    build_lsh_index(docs.limit(0), empty)
+    assert _read_postings(spark, empty).count() == 0
 
     stripped = str(tmp_path / "stripped_idx")
     spark.read.parquet(f"{built}/_params").write.parquet(
         f"{stripped}/_params"
     )
-    with pytest.raises(RuntimeError, match="no _ids relation"):
+    with pytest.raises(RuntimeError, match="no committed write"):
         _read_postings(spark, stripped)
     shutil.rmtree(stripped, ignore_errors=True)
 

@@ -952,7 +952,8 @@ def test_lsh_index_build_probe_append(spark, tmp_path):
     build_lsh_index(docs, path)
 
     bands = [d for d in os.listdir(path) if d.startswith("band=")]
-    assert len(bands) == 8, bands
+    assert "band=-1" in bands  # the id records
+    assert len([d for d in bands if d != "band=-1"]) == 8, bands
     assert os.path.isdir(f"{path}/_params")
 
     q = docs.filter(F.col("doc_id") < 50)
@@ -1014,7 +1015,9 @@ def test_lsh_index_probe_uses_persisted_params(spark, tmp_path):
     build_lsh_index(docs, path, num_hashes=16, bands=4, rows_per_band=4)
     import os
 
-    assert len([d for d in os.listdir(path) if d.startswith("band=")]) == 4
+    bands = [d for d in os.listdir(path) if d.startswith("band=")]
+    assert "band=-1" in bands  # the id records
+    assert len([d for d in bands if d != "band=-1"]) == 4, bands
     out = lsh_index_probe(spark, path, docs.filter(F.col("doc_id") == 1))
     got = {(r["query_id"], r["match_id"]) for r in out.collect()}
     assert (1, 2) in got and (1, 3) not in got
@@ -1171,9 +1174,9 @@ def test_dedup_ingest_replay_gate_covers_sub_n_word_docs(spark, tmp_path):
     """ADVICE r6: a document with fewer than n (=3) words produces no
     MinHash shingles, hence no posting in any band — the old band-0
     replay gate never saw it, so an at-least-once redelivery re-emitted
-    it downstream forever. The persisted {path}/_ids relation records
-    every survivor regardless of shingle count, closing the hole for
-    the streaming foreachBatch path."""
+    it downstream forever. The layout's id records (the band = -1
+    partition) record every survivor regardless of shingle count,
+    closing the hole for the streaming foreachBatch path."""
     from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
         build_lsh_index,
         dedup_ingest,
@@ -1201,9 +1204,66 @@ def test_dedup_ingest_replay_gate_covers_sub_n_word_docs(spark, tmp_path):
     # including the sub-n-word doc that never produced a posting
     replay = dedup_ingest(spark, path, batch, append=True).collect()
     assert replay == []
-    # _ids never accumulates duplicates either
-    ids = spark.read.parquet(f"{path}/_ids")
-    assert ids.count() == ids.distinct().count()
+    # the id records never accumulate duplicates either
+    ids = spark.read.parquet(path).filter("band = -1").select("doc_id")
+    assert ids.count() == ids.distinct().count() == 3
+
+
+@pytest.mark.parametrize("leg", ["before", "after"])
+def test_dedup_ingest_redelivery_after_failed_index_write_converges(
+    spark, tmp_path, monkeypatch, leg
+):
+    """VERDICT r13 #1: an append's postings and id records are ONE
+    write, so a crash either before the write starts or after it
+    commits leaves a layout from which redelivering the batch converges
+    on the no-crash index. Before: nothing landed, so the redelivery
+    appends the whole batch; after: the whole batch landed, so the
+    replay gate drops it. Either way a later near-dup of the batch is
+    caught and the layout equals the no-crash one row for row — no
+    lost and no doubled postings (the sub-n-word doc included)."""
+    from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
+        build_lsh_index,
+        dedup_ingest,
+    )
+
+    from .conftest import fail_partitioned_writes
+
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame(
+        [(100, "established corpus document about streaming analytics")],
+        schema,
+    )
+    batch = spark.createDataFrame(
+        [(7, "hi there"), (8, "fresh full-length document with plenty of words")],
+        schema,
+    )
+    near_dup = spark.createDataFrame(
+        [(9, "fresh full-length document with plenty of words today")], schema
+    )
+
+    def ingest(path, df):
+        return sorted(
+            r["doc_id"]
+            for r in dedup_ingest(spark, path, df, append=True).collect()
+        )
+
+    def layout(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+    ref = str(tmp_path / "no_crash")
+    build_lsh_index(corpus, ref)
+    assert ingest(ref, batch) == [7, 8]
+
+    path = str(tmp_path / leg)
+    build_lsh_index(corpus, path)
+    fail_partitioned_writes(monkeypatch, leg)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        ingest(path, batch)
+    monkeypatch.undo()
+
+    assert ingest(path, batch) == ([7, 8] if leg == "before" else [])
+    assert layout(path) == layout(ref)
+    assert ingest(path, near_dup) == ingest(ref, near_dup) == []
 
 
 def test_embedding_ingest_in_batch_and_replay_gates(spark, tmp_path):
@@ -1249,6 +1309,70 @@ def test_embedding_ingest_in_batch_and_replay_gates(spark, tmp_path):
     assert replay[1] is False and replay[2] is False
 
 
+@pytest.mark.parametrize("leg", ["before", "after"])
+def test_embedding_ingest_redelivery_after_failed_index_write_converges(
+    spark, tmp_path, monkeypatch, leg
+):
+    """The IVF twin of the LSH fault-injection test: the survivors'
+    append is one cell-partitioned write, so a crash before it starts
+    or after it commits converges on redelivery — the batch is kept
+    again (before) or dropped by the replay gate (after), a later
+    near-copy is gated, and the layout equals the no-crash one."""
+    from twitch_stream_data_pipeline_spark.extensions.similarity import (
+        build_ivf_index,
+        embedding_ingest,
+    )
+
+    from .conftest import fail_partitioned_writes
+
+    def vec(*vals):
+        return [float(v) for v in vals]
+
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(
+        [(100 + i, vec(*(1.0 if j == i else 0.05 for j in range(6))))
+         for i in range(6)],
+        schema,
+    )
+    batch = spark.createDataFrame(
+        [
+            (1, vec(-1.0, 1.0, -1.0, 1.0, -1.0, 1.0)),
+            (2, vec(1.0, 1.0, -1.0, -1.0, 1.0, 1.0)),
+        ],
+        schema,
+    )
+    near_copy = spark.createDataFrame(
+        [(3, vec(-1.0, 1.0, -1.0, 1.0, -1.0, 0.98))], schema
+    )
+
+    def kept(path, df):
+        return sorted(
+            r["vec_id"]
+            for r in embedding_ingest(
+                spark, path, df, threshold=0.9, append=True
+            ).collect()
+            if r["keep"]
+        )
+
+    def layout(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+    ref = str(tmp_path / "no_crash")
+    build_ivf_index(corpus, ref, n_cells=3)
+    assert kept(ref, batch) == [1, 2]
+
+    path = str(tmp_path / leg)
+    build_ivf_index(corpus, path, n_cells=3)
+    fail_partitioned_writes(monkeypatch, leg)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        kept(path, batch)
+    monkeypatch.undo()
+
+    assert kept(path, batch) == ([1, 2] if leg == "before" else [])
+    assert layout(path) == layout(ref)
+    assert kept(path, near_copy) == kept(ref, near_copy) == []
+
+
 def test_model_io_local_and_spark_paths_agree(spark, tmp_path):
     """read_small_parquet: the pyarrow fast path (local dir) and the
     Spark fallback (file: URI is parsed; an explicit scheme the local
@@ -1280,81 +1404,6 @@ def test_model_io_local_and_spark_paths_agree(spark, tmp_path):
     # explicit file: URI takes the pyarrow path there
     assert _local_dir(p, "hdfs://namenode:8020") is None
     assert _local_dir(f"file://{p}", "hdfs://namenode:8020") == p
-
-
-def test_dedup_ingest_replay_gate_legacy_layout_without_ids(spark, tmp_path):
-    """A standing index built before the _ids relation existed must not
-    crash the replay gate: it falls back to the band-0 id scan (the
-    pre-_ids behavior — postings-bearing docs are still caught; only
-    legacy sub-n-word docs are invisible until the next append
-    BACKFILLS _ids from the postings)."""
-    import shutil
-
-    from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
-        build_lsh_index,
-        dedup_ingest,
-    )
-
-    schema = "doc_id long, text string"
-    corpus = spark.createDataFrame(
-        [(100, "established corpus document about streaming analytics")],
-        schema,
-    )
-    path = str(tmp_path / "legacy")
-    build_lsh_index(corpus, path)
-    shutil.rmtree(f"{path}/_ids")  # simulate a pre-round-7 layout
-
-    batch = spark.createDataFrame(
-        [
-            (100, "established corpus document about streaming analytics"),
-            (7, "a brand new document with its own fresh sentence here"),
-        ],
-        schema,
-    )
-    kept = sorted(
-        r["doc_id"] for r in dedup_ingest(spark, path, batch).collect()
-    )
-    # 100 is caught by the band-0 fallback replay gate; 7 survives
-    assert kept == [7]
-
-
-def test_dedup_ingest_legacy_first_append_backfills_ids(spark, tmp_path):
-    """Review r7: the FIRST append to a pre-_ids layout must backfill
-    the relation from the existing postings. Starting _ids with only
-    the new batch would make the gate trust a PARTIAL relation as
-    complete, so every redelivered legacy document would bypass gate 3
-    forever (the probe self-excludes a doc's own indexed copy)."""
-    import shutil
-
-    from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
-        build_lsh_index,
-        dedup_ingest,
-    )
-
-    schema = "doc_id long, text string"
-    legacy = (100, "established corpus document about streaming analytics")
-    path = str(tmp_path / "legacy_append")
-    build_lsh_index(spark.createDataFrame([legacy], schema), path)
-    shutil.rmtree(f"{path}/_ids")  # simulate a pre-round-7 layout
-
-    batch = spark.createDataFrame(
-        [(7, "a brand new document with its own fresh sentence here")],
-        schema,
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup_ingest(spark, path, batch, append=True).collect()
-    )
-    assert kept == [7]
-    # the append backfilled the legacy id alongside the new one
-    ids = {r["doc_id"] for r in spark.read.parquet(f"{path}/_ids").collect()}
-    assert ids == {7, 100}
-
-    # at-least-once redelivery of the LEGACY document: only gate 3 can
-    # drop it (its sole candidate match is its own indexed copy, which
-    # the probe self-excludes) — a partial _ids re-emitted it
-    redelivered = spark.createDataFrame([legacy], schema)
-    assert dedup_ingest(spark, path, redelivered, append=True).collect() == []
 
 
 def test_ensure_protobuf_failed_attempt_rolls_back(monkeypatch, tmp_path):
@@ -1440,7 +1489,7 @@ def test_ensure_protobuf_success_path_is_scoped():
 
 def test_dedup_ingest_survivors_pinned_before_index_mutation(spark, tmp_path):
     """ADVICE r7: the survivors relation embeds the gate pipeline,
-    which scans the very postings/_ids paths append=True mutates.
+    which scans the very index layout append=True mutates.
     The returned handle must be MATERIALIZED before the append —
     otherwise any file-listing refresh makes a later collect re-run
     the gates against the batch's own postings and report zero
@@ -1472,7 +1521,6 @@ def test_dedup_ingest_survivors_pinned_before_index_mutation(spark, tmp_path):
     assert "LogicalRDD" in plan, plan
     assert "parquet" not in plan.lower(), plan  # no index scan survives
     spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(f"{path}/_ids")
     assert [r["doc_id"] for r in survivors.collect()] == [1]
     # and again: the materialized handle is stable across actions
     assert survivors.count() == 1
@@ -1689,8 +1737,9 @@ def test_purge_vendored_google_spares_preexisting_locationless_stub():
 
 def test_build_lsh_index_executes_input_plan_once(spark, tmp_path):
     """VERDICT r8 "what's wrong" #2: the build used to execute the
-    input plan twice (postings write, then the _ids write re-scanned
-    df) — free for a raw parquet scan, a doubled pipeline for a
+    input plan twice (postings write, then the id write re-scanned
+    df); the postings and id records are still two branches over the
+    input — free for a raw parquet scan, a doubled pipeline for a
     derived input. The eager pin makes it one execution; an
     accumulator in the input plan counts."""
     from twitch_stream_data_pipeline_spark.extensions.dedup_text import (

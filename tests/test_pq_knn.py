@@ -340,3 +340,65 @@ def test_zero_norm_vectors_never_produce_nan(spark, tmp_path):
     assert set(by_q) == {0, 1}
     # zero query scores exactly 0 against every neighbor
     assert all(r["adc_cosine"] == 0.0 for r in by_q[0])
+
+
+@pytest.mark.parametrize("leg", ["before", "after"])
+def test_ivfpq_append_after_failed_write_converges(spark, tmp_path, monkeypatch, leg):
+    """An IVF+PQ append is one cell-partitioned write: a crash before
+    the write starts leaves the built layout untouched, a crash after
+    it commits leaves the whole batch appended — never part of it. The
+    append has no replay gate of its own, so the redelivering caller
+    skips the ids the layout already holds; the redelivery then
+    converges on the no-crash layout and probes in both legs."""
+    from twitch_stream_data_pipeline_spark.extensions.similarity import (
+        append_to_ivfpq_index,
+    )
+
+    from .conftest import fail_partitioned_writes
+
+    random.seed(7)
+    dim = 16
+
+    def rand_rows(ids):
+        return [
+            (i, [round(random.uniform(-1, 1), 3) for _ in range(dim)])
+            for i in ids
+        ]
+
+    corpus = _vec_df(spark, rand_rows(range(1, 13)), dim)
+    batch_rows = rand_rows([20, 21])
+    batch = _vec_df(spark, batch_rows, dim)
+    copy_of_20 = _vec_df(spark, [(30, batch_rows[0][1])], dim)
+
+    def build(path):
+        build_ivfpq_index(corpus, path, n_cells=4, m=4, n_codes=8, train_size=12)
+
+    def redeliver(path):
+        indexed = [r["vec_id"] for r in spark.read.parquet(path).collect()]
+        append_to_ivfpq_index(batch.filter(~F.col("vec_id").isin(indexed)), path)
+
+    def layout(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+    def probe(path):
+        return sorted(
+            map(tuple, ivfpq_index_knn(spark, path, copy_of_20, k=3, n_probe=4).collect())
+        )
+
+    ref = str(tmp_path / "no_crash")
+    build(ref)
+    built = layout(ref)
+    append_to_ivfpq_index(batch, ref)
+
+    path = str(tmp_path / leg)
+    build(path)
+    fail_partitioned_writes(monkeypatch, leg)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        append_to_ivfpq_index(batch, path)
+    monkeypatch.undo()
+    assert layout(path) == (built if leg == "before" else layout(ref))
+
+    redeliver(path)
+    assert layout(path) == layout(ref)
+    assert probe(path) == probe(ref)
+    assert 20 in {r[1] for r in probe(path)}

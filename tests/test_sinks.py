@@ -712,9 +712,10 @@ def test_index_layouts_compact_with_standard_lake_maintenance(spark, tmp_path):
     """The standing-index maintenance story: a 15-minute ingest cadence
     appends one file per band/cell directory per batch, and the SAME
     compact_partitions job that maintains the lake layers (K6)
-    maintains the index layouts — partition dirs collapse to one file
-    each, the persisted models and the _ids relation are untouched
-    bytes, and probe results are identical before and after."""
+    maintains the index layouts — partition dirs, the band = -1 id
+    records included, collapse to one file each, the persisted models
+    and the indexed ids are unchanged, and probe results are identical
+    before and after."""
     import glob
     import os
 
@@ -757,6 +758,7 @@ def test_index_layouts_compact_with_standard_lake_maintenance(spark, tmp_path):
 
     before_files = files_per_band()
     assert max(before_files.values()) >= 4  # build + 3 appends fragmented
+    assert before_files["band=-1"] >= 4  # id records fragment the same way
 
     queries = spark.createDataFrame(
         [(1, "document number 101 about streaming analytics topic 3")],
@@ -765,24 +767,28 @@ def test_index_layouts_compact_with_standard_lake_maintenance(spark, tmp_path):
     before_probe = sorted(
         map(tuple, lsh_index_probe(spark, path, queries).collect())
     )
-    models_before = (
-        sorted(map(tuple, spark.read.parquet(f"{path}/_params").collect())),
-        sorted(map(tuple, spark.read.parquet(f"{path}/_ids").collect())),
-    )
+    def models():
+        return (
+            sorted(map(tuple, spark.read.parquet(f"{path}/_params").collect())),
+            sorted(
+                r["doc_id"]
+                for r in spark.read.parquet(path).filter("band = -1").collect()
+            ),
+        )
+
+    models_before = models()
 
     compact_partitions(spark, path, partition_col="band")
 
     after_files = files_per_band()
     assert set(after_files) == set(before_files)  # no partition lost
     assert max(after_files.values()) == 1, after_files
+    assert after_files["band=-1"] == 1, after_files
     assert (
         sorted(map(tuple, lsh_index_probe(spark, path, queries).collect()))
         == before_probe
     )
-    assert (
-        sorted(map(tuple, spark.read.parquet(f"{path}/_params").collect())),
-        sorted(map(tuple, spark.read.parquet(f"{path}/_ids").collect())),
-    ) == models_before
+    assert models() == models_before
     # postings themselves survived the rewrite intact
     postings = spark.read.parquet(path)
     assert postings.count() == postings.distinct().count()

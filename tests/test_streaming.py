@@ -1272,8 +1272,8 @@ def test_streaming_ingest_full_redelivery_emits_nothing(spark, tmp_path):
     """At-least-once END-TO-END: after a complete run, replaying the
     WHOLE source against a FRESH checkpoint (the strongest redelivery —
     every file re-fires) must emit ZERO survivors. Docs that survived
-    the first run are caught by the replay gate's persisted ``_ids``
-    relation (including the sub-n-word doc, which has no postings);
+    the first run are caught by the replay gate's persisted id records
+    (including the sub-n-word doc, which has no postings);
     the rest are still duplicates. The index must not grow either."""
     from twitch_stream_data_pipeline_spark.extensions.dedup_text import (
         build_lsh_index,
@@ -1294,7 +1294,7 @@ def test_streaming_ingest_full_redelivery_emits_nothing(spark, tmp_path):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog tonight"),  # dup
         (2, "a genuinely novel document with fresh words entirely"),
-        (3, "tiny doc"),  # sub-n-word: no shingles, only _ids covers it
+        (3, "tiny doc"),  # sub-n-word: no shingles, only its id record
     ]
     for i, row in enumerate(rows):
         spark.createDataFrame([row], schema).coalesce(1).write.parquet(
@@ -1324,13 +1324,13 @@ def test_streaming_ingest_full_redelivery_emits_nothing(spark, tmp_path):
     assert run("ckpt1") == [2, 3]
     ids_before = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{path}/_ids").collect()
+        for r in spark.read.parquet(path).filter("band = -1").collect()
     }
     # fresh checkpoint: every source file redelivered from offset zero
     assert run("ckpt2") == []
     ids_after = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{path}/_ids").collect()
+        for r in spark.read.parquet(path).filter("band = -1").collect()
     }
     assert ids_after == ids_before == {100, 2, 3}
 

@@ -730,27 +730,6 @@ def near_dup_verify(
     )
 
 
-def _run_concurrently(*thunks) -> None:
-    """Run independent Spark actions from a small driver thread pool
-    (guide §2.6): Spark happily schedules several jobs at once, and a
-    later job's tasks back-fill executors freed by an earlier job's
-    straggler tail. ``inheritable_thread_target`` carries the caller's
-    thread-local JVM properties (job group, description) into the pool
-    threads — without it, concurrent jobs would escape the caller's
-    job-group accounting. Exceptions propagate (first one raised after
-    all complete-or-fail), matching sequential semantics."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
-        ]
-        for f in futures:
-            f.result()
-
-
 def _as_doc_id(df: DataFrame, id_col: str) -> DataFrame:
     """Internal: present ``id_col`` as the ``doc_id`` the signature /
     banding primitives are written against (no-op for the default)."""
@@ -788,16 +767,16 @@ def build_lsh_index(
     recall degradation via PartitionFilters pruning — IVF's
     ``n_probe``, re-expressed for LSH.
 
-    The input is pinned ONCE (eager ``localCheckpoint``) before the
-    two writes (VERDICT r8 "what's wrong" #2): the build's postings
-    write and the ``_ids`` write otherwise each execute the full input
-    plan — free for a raw parquet scan (the ``_ids`` pass prunes to
-    one column) but a doubled full pipeline whenever the input is
-    derived (a curation DAG, a gate output), and an in-place REBUILD
-    whose input reads the very index path being overwritten would,
-    like the append case, re-execute against mutated files. The pin
-    costs one batch-sized materialization, same spill-to-disk
-    economics as the append path's.
+    The same write lands one id record per document in ``band=-1``
+    (see :func:`_write_index_rows`), so the layout is one relation and
+    Spark's job commit (``_SUCCESS``) is its only commit point. The
+    input is pinned ONCE (eager ``localCheckpoint``) first (VERDICT r8
+    "what's wrong" #2): the postings and the id records are two
+    branches over the input, each of which would otherwise execute the
+    full input plan — a doubled pipeline whenever the input is derived
+    (a curation DAG, a gate output) — and an in-place REBUILD whose
+    input reads the index path being overwritten would, like the
+    append case, re-execute against mutated files.
     """
     if bands * rows_per_band > num_hashes:
         raise ValueError(
@@ -806,56 +785,48 @@ def build_lsh_index(
         )
     import pandas as pd
 
-    from ..sinks import write_partitioned
-
-    df = df.localCheckpoint(eager=True)
-    sigs = minhash_signatures(
-        _as_doc_id(df, id_col), text_col, num_hashes, n
-    )
-    # NOT overlappable (r13 §2.6 study): the postings write is a
-    # STATIC overwrite of the layout ROOT — it deletes everything
-    # under `path` first, `_ids` included — so the `_ids` write has a
-    # real ordering dependency on it (a concurrent attempt raced the
-    # root delete and produced layouts with no `_ids`, tripping the
-    # legacy-layout guard). The append path's two writes ARE disjoint
-    # and run concurrently; see append_to_lsh_index.
-    write_partitioned(
-        band_keys(sigs, bands, rows_per_band), path, ["band"],
-        mode="overwrite",
-    )
-    _write_lsh_ids(df, path, id_col, mode="overwrite")
     from .model_io import write_small_parquet
 
-    write_small_parquet(
-        df.sparkSession,
-        f"{path}/_params",
-        pd.DataFrame(
-            [
-                {
-                    "num_hashes": num_hashes,
-                    "n": n,
-                    "bands": bands,
-                    "rows_per_band": rows_per_band,
-                }
-            ]
-        ),
+    p = {
+        "num_hashes": num_hashes,
+        "n": n,
+        "bands": bands,
+        "rows_per_band": rows_per_band,
+    }
+    df = df.localCheckpoint(eager=True)
+    _write_index_rows(df, path, text_col, id_col, p, mode="overwrite")
+    write_small_parquet(df.sparkSession, f"{path}/_params", pd.DataFrame([p]))
+
+
+#: ``band`` value of the id records: one ``(doc_id, NULL, -1)`` row per
+#: indexed document, beside its band postings
+_ID_BAND = -1
+
+
+def _write_index_rows(
+    df: DataFrame, path: str, text_col: str, id_col: str, p: dict, mode: str
+) -> None:
+    """The ONE write of a build or an append: the batch's band postings
+    plus one id record per document (``band = _ID_BAND``, NULL
+    ``band_hash``). The id records cover EVERY indexed document — one
+    with fewer than ``n`` words has no shingles, hence no posting in
+    any band, and the :func:`dedup_ingest` replay gate must still see
+    it (ADVICE r6). Both land in one job, so a failed write commits
+    neither and a committed one commits both; the replay gate can never
+    trust an id whose postings are missing (VERDICT r13 #1)."""
+    from ..sinks import write_partitioned
+
+    sigs = minhash_signatures(
+        _as_doc_id(df, id_col), text_col, p["num_hashes"], p["n"]
     )
-
-
-def _write_lsh_ids(df: DataFrame, path: str, id_col: str, mode: str) -> None:
-    """Persist the indexed-id relation ``{path}/_ids`` — EVERY indexed
-    document's id, independent of whether it produced postings. A
-    document with fewer than ``n`` words has no shingles, hence no
-    signature row and no posting in any band; without this relation
-    the :func:`dedup_ingest` replay gate (which used to scan band 0)
-    never saw such documents, so an at-least-once redelivery re-emitted
-    them downstream (ADVICE r6). Id-count-sized (8 bytes/row), scanned
-    only via the replay gate's broadcast semi-join."""
-    (
-        df.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .write.mode(mode)
-        .parquet(f"{path}/_ids")
+    ids = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.lit(None).cast("string").alias("band_hash"),
+        F.lit(_ID_BAND).alias("band"),
+    ).distinct()
+    write_partitioned(
+        band_keys(sigs, p["bands"], p["rows_per_band"]).unionByName(ids),
+        path, ["band"], mode=mode,
     )
 
 
@@ -872,94 +843,50 @@ def append_to_lsh_index(
 ) -> DataFrame:
     """Incrementally extend a :func:`build_lsh_index` layout: band the
     new documents with the PERSISTED parameters and append their
-    postings into the band partitions. Probes see old and new
-    documents identically; no rebuild, no re-banding of history.
+    postings and id records into the band partitions in one write.
+    Probes see old and new documents identically; no rebuild, no
+    re-banding of history.
 
     The batch is materialized ONCE (eager ``localCheckpoint``) before
-    any index mutation, and the pinned DataFrame is returned. In
+    the index mutation, and the pinned DataFrame is returned. In
     :func:`dedup_ingest` the incoming plan embeds the gate pipeline,
-    which scans the very postings/``_ids`` paths this function appends
-    to; without the pin, the ``_ids`` write (and any later caller
-    action on the batch) would RE-execute that pipeline after the
-    postings append — correct only while Spark's cached
-    InMemoryFileIndex snapshot survives, and silently wrong (the batch
-    would gate against its own postings) on any listing refresh
-    (ADVICE r7). The pin also removes the second full gate probe per
-    ingest batch. Batch-sized blocks, the incremental-ingest contract.
+    which scans the very layout this function appends to; without the
+    pin, the write's two branches (and any later caller action on the
+    batch) would each re-execute that pipeline — correct only while
+    Spark's cached InMemoryFileIndex snapshot survives, and silently
+    wrong (the batch would gate against its own postings) on any
+    listing refresh (ADVICE r7). Batch-sized blocks, the
+    incremental-ingest contract.
     """
-    from ..sinks import write_partitioned
-    from .model_io import fs_path_exists
-
     # validate the layout BEFORE the eager pin: the incoming plan may
     # embed the whole gate pipeline, and materializing it for a call
     # that fails on a bad/absent index path is a full-batch probe paid
     # for nothing (review r8)
-    spark = new_df.sparkSession
-    p = _lsh_params(spark, path)
+    p = _lsh_params(new_df.sparkSession, path)
     new_df = new_df.localCheckpoint(eager=True)
-    if not fs_path_exists(spark, f"{path}/_ids"):
-        # Legacy layout built before the _ids relation existed: the
-        # FIRST append must backfill _ids from the existing postings
-        # (band 0 — every doc with postings appears in every band),
-        # or the partial relation it starts would make the replay
-        # gate treat every legacy document as un-indexed forever
-        # (review r7: a redelivered legacy doc bypassed gate 3 once
-        # _ids existed without it). Legacy sub-n-word docs left no
-        # record anywhere and stay invisible — the pre-round-7
-        # behavior, documented at the gate.
-        (
-            _read_postings(spark, path)
-            .filter(F.col("band") == 0)
-            .select("doc_id")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{path}/_ids")
-        )
-    sigs = minhash_signatures(
-        _as_doc_id(new_df, id_col), text_col, p["num_hashes"], p["n"]
-    )
-    # Independent appends to DISJOINT sub-paths over the pinned batch
-    # (unlike the build, where the postings overwrite deletes the
-    # layout root and so must precede the _ids write) — overlapped per
-    # guide §2.6 so the id-sized _ids job back-fills the postings
-    # append's task tail. inheritable_thread_target carries the
-    # caller's job group/description into the pool threads (the
-    # documented PySpark device), keeping job accounting and UI labels
-    # correct. Failure atomicity matches the sequential form: either
-    # append failing leaves the same partial-layout classes, and
-    # exceptions propagate via result(). The legacy _ids backfill
-    # above stays sequential — the _ids append extends it.
-    _run_concurrently(
-        lambda: write_partitioned(
-            band_keys(sigs, p["bands"], p["rows_per_band"]), path,
-            ["band"], mode="append",
-        ),
-        lambda: _write_lsh_ids(new_df, path, id_col, mode="append"),
-    )
+    _write_index_rows(new_df, path, text_col, id_col, p, mode="append")
     return new_df
 
 
 #: file columns + the band partition column of the build_lsh_index
-#: postings layout (band_keys output, band partition-encoded)
+#: layout (band postings and ``_ID_BAND`` id records)
 _POSTINGS_DDL = "doc_id bigint, band_hash string, band int"
 
 
 def _read_postings(spark, path: str) -> DataFrame:
-    """Read a postings layout, tolerating the EMPTY one: an index
-    built over a corpus with zero shingles (every doc shorter than the
-    shingle width, or all-empty text — legal content) writes the
-    partitioned root with no part files at all, so schema inference
-    fails with UNABLE_TO_INFER_SCHEMA; fall back to the known layout
-    schema and an empty scan (round-9 degenerate-corpus probe).
+    """Read an LSH index layout — band postings (``band >= 0``) and id
+    records (``band = _ID_BAND``) — tolerating the EMPTY one: a build
+    over an empty corpus commits a root with no part files, only
+    ``_SUCCESS``, so schema inference fails with
+    UNABLE_TO_INFER_SCHEMA; fall back to the known layout schema and
+    an empty scan (round-9 degenerate-corpus probe).
 
-    The fallback is gated on ``{path}/_ids`` existing: every modern
-    build/append writes that relation (non-partitioned, readable even
-    when empty), so no-part-files + _ids present is a PROVABLY empty
-    build — whereas no-part-files on a legacy layout (no _ids) means
-    the band directories were stripped out from under a surviving
-    _params, and silently treating that as an empty index would make
-    the ingest replay gate re-emit every redelivered document (the
-    r7-banned silent degrade). That case re-raises."""
+    The fallback is gated on the root ``_SUCCESS``: no part files and
+    no commit marker means the band directories were stripped out from
+    under a surviving ``_params`` (or the build never committed), and
+    silently treating that as an empty index would make the ingest
+    replay gate re-emit every redelivered document (the r7-banned
+    silent degrade). That case re-raises."""
     try:
         return spark.read.parquet(path)
     except Exception as e:
@@ -967,14 +894,14 @@ def _read_postings(spark, path: str) -> DataFrame:
             raise
         from .model_io import fs_path_exists
 
-        if not fs_path_exists(spark, f"{path}/_ids"):
+        if not fs_path_exists(spark, f"{path}/_SUCCESS"):
             raise RuntimeError(
-                f"LSH postings at {path} have no readable part files AND "
-                "no _ids relation: either the band directories were "
-                "stripped (restore them or rebuild the index) or this is "
-                "a pre-_ids legacy layout whose postings are gone. "
-                "Refusing to treat it as an empty index — the replay "
-                "gate would silently re-emit every redelivered document."
+                f"LSH index at {path} has no readable part files and no "
+                "committed write (_SUCCESS): either the band directories "
+                "were stripped (restore them or rebuild the index) or its "
+                "build never committed. Refusing to treat it as an empty "
+                "index — the replay gate would silently re-emit every "
+                "redelivered document."
             ) from e
         return spark.read.schema(_POSTINGS_DDL).parquet(path)
 
@@ -1041,7 +968,9 @@ def lsh_index_probe(
         # VERDICT r12 #4 job-count trim; measured jobs down, probe
         # split unchanged).
         qb = qb.localCheckpoint(eager=False)
-    postings = _read_postings(spark, path).filter(F.col("band") < bands)
+    postings = _read_postings(spark, path).filter(
+        F.col("band").between(0, bands - 1)  # id records excluded
+    )
     touched = postings.join(
         F.broadcast(qb.select("band", "band_hash").distinct()),
         ["band", "band_hash"],
@@ -1087,12 +1016,15 @@ def dedup_ingest(
        is not already indexed — an at-least-once redelivery (standard
        foreachBatch recovery) would otherwise slip past the probe's
        self-exclusion, re-emit downstream, and append duplicate
-       postings. Checked against the persisted ``{path}/_ids``
-       relation, which records EVERY indexed id — including documents
-       with fewer than ``n`` words, which produce no shingles and
-       hence no posting in any band (ADVICE r6: a band scan missed
-       them, so short docs were re-emitted on replay). Id-count-sized
-       scan + broadcast semi-join on the batch ids.
+       postings. Checked against the layout's id records (the
+       ``band = -1`` partition), which record EVERY indexed id —
+       including documents with fewer than ``n`` words, which produce
+       no shingles and hence no posting in any band (ADVICE r6: a band
+       scan missed them, so short docs were re-emitted on replay).
+       They are written in the same job as the postings, so an id is
+       never recorded without its postings (VERDICT r13 #1). One
+       partition-pruned, id-count-sized scan + broadcast semi-join on
+       the batch ids.
 
     Each gate is computed over the FULL batch independently (not
     sequentially), so the result is deterministic under any
@@ -1102,14 +1034,14 @@ def dedup_ingest(
     by design, like every candidate-level dedup gate; callers wanting
     verified-distance semantics insert :func:`near_dup_verify`
     between probe and anti-join. With ``append=True`` the survivors'
-    postings extend the index in the same call (probe-then-extend:
-    the next batch dedups against them too).
+    postings and id records extend the index in the same call
+    (probe-then-extend: the next batch dedups against them too).
 
     This is the OPERATIONAL form of the index: per-ingest all-pairs
     LSH over (corpus + batch) would re-shuffle the whole history every
     15 minutes; here history is touched only through the probe's
-    broadcast join and two pruned posting scans, and the append
-    writes only the batch's postings.
+    broadcast join and pruned scans of the layout, and the append
+    writes only the batch's rows.
     """
     p = _lsh_params(spark, path)  # one params read per ingest call
     qsig = minhash_signatures(
@@ -1130,27 +1062,13 @@ def dedup_ingest(
             in_batch.select(F.col("doc_b").alias(id_col))
         )
     if drop_existing_ids:
-        from .model_io import fs_path_exists
-
-        if fs_path_exists(spark, f"{path}/_ids"):
-            # complete id set, sub-n-word docs included (gate 3 in the
-            # docstring)
-            indexed = spark.read.parquet(f"{path}/_ids")
-        else:
-            # legacy layout built before the _ids relation existed:
-            # fall back to one band partition (an indexed doc with
-            # postings appears in every band — only sub-n-word docs
-            # are invisible here, the pre-round-7 behavior). The next
-            # append_to_lsh_index call backfills the _ids relation
-            # from this same band scan before extending it. An
-            # explicit existence probe, NOT a bare except around the
-            # read: a transient/corrupt-read error must propagate,
-            # not silently degrade the gate (review r7).
-            indexed = (
-                _read_postings(spark, path)
-                .filter(F.col("band") == 0)
-                .select("doc_id")
-            )
+        # the id records, sub-n-word docs included (gate 3 in the
+        # docstring); `band = _ID_BAND` prunes to one partition
+        indexed = (
+            _read_postings(spark, path)
+            .filter(F.col("band") == _ID_BAND)
+            .select("doc_id")
+        )
         existing = (
             indexed.join(
                 F.broadcast(

@@ -9,8 +9,8 @@ never quantize differently than the layout — and a
 anyway. For local filesystem paths the read goes through pyarrow
 directly (sub-millisecond); any other scheme (hdfs://, s3a://...)
 falls back to the Spark reader, which speaks every configured
-filesystem. Data-sized relations (postings, codes, `_ids`) are never
-read this way — they stay distributed scans.
+filesystem. Data-sized relations (postings and id records, codes) are
+never read this way — they stay distributed scans.
 """
 
 from __future__ import annotations

@@ -386,10 +386,7 @@ def build_ivf_index(
     ``{path}/_quantizer`` unchanged, so probes reload the exact layout
     model either way.
     """
-    import pandas as pd
-
     from ..sinks import write_partitioned
-    from .model_io import write_small_parquet
 
     reserved = {"cell", "q_vec"} & set(candidates.columns)
     if reserved:
@@ -413,15 +410,37 @@ def build_ivf_index(
         _cluster_write(_assign_cells(candidates, cent, vec_col)),
         path, ["cell"], mode="overwrite",
     )
+    _write_quantizer(candidates.sparkSession, path, cent)
+
+
+def _write_quantizer(spark, path: str, cent) -> None:
+    """Persist the coarse quantizer (one row per cell) at
+    ``{path}/_quantizer`` — the one writer, shared by both builds."""
+    import pandas as pd
+
+    from .model_io import write_small_parquet
+
     write_small_parquet(
-        candidates.sparkSession,
+        spark,
         f"{path}/_quantizer",
         pd.DataFrame(
-            {
-                "cell": range(len(cent)),
-                "centroid": [row.tolist() for row in cent],
-            }
+            {"cell": range(len(cent)), "centroid": [r.tolist() for r in cent]}
         ),
+    )
+
+
+def _load_quantizer(spark, path: str):
+    """The persisted coarse quantizer as an ``n_cells x dim`` matrix —
+    the one reader, shared by every append and probe so none of them
+    can decode the layout's model differently."""
+    import numpy as np
+
+    from .model_io import read_small_parquet
+
+    rows = read_small_parquet(spark, f"{path}/_quantizer")
+    return np.array(
+        [r["centroid"] for r in sorted(rows, key=lambda r: r["cell"])],
+        dtype=np.float64,
     )
 
 
@@ -482,8 +501,6 @@ def append_to_ivf_index(
     vectors identically, and a periodic full rebuild re-balances cells
     when drift accumulates (cell-size skew is the rebuild signal).
     """
-    import numpy as np
-
     reserved = {"cell", "q_vec"} & set(new_candidates.columns)
     if reserved:
         raise ValueError(
@@ -492,12 +509,7 @@ def append_to_ivf_index(
         )
     from ..sinks import write_partitioned
 
-    spark = new_candidates.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/_quantizer").collect()
-    cent = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])],
-        dtype=np.float64,
-    )
+    cent = _load_quantizer(new_candidates.sparkSession, path)
     write_partitioned(
         _cluster_write(_assign_cells(new_candidates, cent, vec_col)),
         path, ["cell"], mode="append",
@@ -527,18 +539,9 @@ def ivf_index_knn(
     """
     import numpy as np
 
-    if quantizer is not None:
-        # caller already loaded the persisted model (embedding_ingest
-        # needs n_cells anyway) — one model read per ingest, not two
-        cent = quantizer
-    else:
-        from .model_io import read_small_parquet
-
-        cent_rows = read_small_parquet(spark, f"{path}/_quantizer")
-        cent = np.array(
-            [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])],
-            dtype=np.float64,
-        )
+    # a caller that already loaded the persisted model (embedding_ingest
+    # needs n_cells anyway) passes it — one model read per ingest
+    cent = quantizer if quantizer is not None else _load_quantizer(spark, path)
     q_rows = queries.select(
         F.col(id_col).alias("query_id"),
         quantized_embedding(F.col(vec_col)).alias("q_vec"),
@@ -1055,15 +1058,7 @@ def embedding_ingest(
       exclusion and re-append). One column-pruned scan of the
       layout's id column.
     """
-    import numpy as np
-
-    from .model_io import read_small_parquet
-
-    cent_rows = read_small_parquet(spark, f"{path}/_quantizer")
-    cent = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])],
-        dtype=np.float64,
-    )  # one model read, shared with the probe below
+    cent = _load_quantizer(spark, path)  # shared with the probe below
     n_cells = len(cent)
     k_probe = n_cells if n_probe is None else min(n_probe, n_cells)
     nearest = ivf_index_knn(
@@ -1183,13 +1178,7 @@ def build_ivfpq_index(
         path, ["cell"], mode="overwrite",
     )
     spark = candidates.sparkSession
-    write_small_parquet(
-        spark,
-        f"{path}/_quantizer",
-        pd.DataFrame(
-            {"cell": range(len(cent)), "centroid": [r.tolist() for r in cent]}
-        ),
-    )
+    _write_quantizer(spark, path, cent)
     n_books, n_cent, dsub = books.shape
     rows = [
         {"book": j, "code": c, "centroid": books[j, c].tolist()}
@@ -1255,11 +1244,7 @@ def _load_ivfpq_models(spark, path: str):
 
     from .model_io import read_small_parquet
 
-    cent_rows = read_small_parquet(spark, f"{path}/_quantizer")
-    cent = np.array(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])],
-        dtype=np.float64,
-    )
+    cent = _load_quantizer(spark, path)
     book_rows = read_small_parquet(spark, f"{path}/_codebooks")
     n_books = 1 + max(r["book"] for r in book_rows)
     n_cent = 1 + max(r["code"] for r in book_rows)

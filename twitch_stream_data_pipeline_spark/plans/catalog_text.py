@@ -485,8 +485,8 @@ def q_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the former `corpus.head(1)` emptiness branch cost an executeTake
     # job on EVERY invocation to special-case a corpus that is empty.
     # An index built over an empty corpus is a first-class layout
-    # (parquet root with no part files + empty `_ids` + default
-    # `_params` — the round-9 degenerate-corpus contract in
+    # (committed parquet root with no part files + default `_params`
+    # — the round-9 degenerate-corpus contract in
     # `_read_postings`), and dedup_ingest over it applies exactly the
     # in-batch gate with the build-default parameters: the same result
     # the branch computed, now on one code path (empty-input sweeps
